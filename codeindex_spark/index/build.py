@@ -471,19 +471,6 @@ _SUM_COLS = (
 )
 
 
-def compute_field_stats(docs: DataFrame, fields: tuple[str, ...] = ALL_FIELDS) -> pd.DataFrame:
-    """(field, n_docs, avgdl, total_dl) — one cheap scan, tiny result.
-
-    Doc length = token count from the same regex as the tokenizer, so
-    stats agree exactly with the doc-term rows.
-    """
-    agg = _tok_count_cols(docs).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        *[F.sum(f"_tc_{c}").alias(f"sum_{c}") for c in _SUM_COLS],
-    )
-    return _stats_from_sums(agg.collect()[0], fields)
-
-
 def compute_plan(
     docs: DataFrame,
     fields: tuple[str, ...],

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,33 +45,6 @@ def bucket_col(num_buckets: int):
         F.conv(F.substring(F.sha2(key, 256), 1, 8), 16, 10).cast("long")
         % num_buckets
     ).cast("int")
-
-
-def compute_bucket_offsets(
-    docs: DataFrame, num_buckets: int, block_size: int, base_doc_id: int = 0
-) -> pd.DataFrame:
-    """One cheap count-aggregation job -> (bucket, count, base) frame.
-    NUM_BUCKETS rows — driver-small at any corpus scale.
-    ``base_doc_id`` starts the docID space above an existing segment
-    (delta segments in incremental maintenance); it must already be a
-    multiple of block_size."""
-    counts = (
-        docs.select(bucket_col(num_buckets).alias("bucket"))
-        .groupBy("bucket")
-        .count()
-        .toPandas()
-        .set_index("bucket")["count"]
-    )
-    full = np.zeros(num_buckets, dtype=np.int64)
-    full[counts.index.to_numpy()] = counts.to_numpy()
-    bases = np.zeros(num_buckets, dtype=np.int64)
-    cur = int(base_doc_id)
-    for b in range(num_buckets):
-        bases[b] = cur
-        cur = -(-(cur + full[b]) // block_size) * block_size  # round up
-    return pd.DataFrame(
-        {"bucket": np.arange(num_buckets), "n_docs": full, "base": bases}
-    )
 
 
 def assign_doc_ids(

@@ -34,6 +34,7 @@ import json
 import os
 import time
 import dataclasses
+import functools
 from dataclasses import dataclass
 
 import pandas as pd
@@ -377,35 +378,40 @@ class IndexBuilder:
 
 
 class IndexReader:
-    """Query-side handle: lazily-loaded DataFrames over the layout."""
+    """Query-side handle: a point-in-time view of a finalized index
+    directory.
+
+    ``params`` is read at open; each table frame (``docs``,
+    ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
+    first access and then held, so a query does not re-run Parquet
+    schema inference and file listing per access. The held frames
+    keep the file listing they were opened with: reopen the reader
+    after rebuilding or compacting its directory."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.paths = IndexPaths(index_dir)
         self.params = IndexParams.from_dict(json.load(open(self.paths.params)))
-        self._stats: pd.DataFrame | None = None
 
-    @property
+    @functools.cached_property
     def docs(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.docs)
 
-    @property
+    @functools.cached_property
     def postings(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.postings)
 
-    @property
+    @functools.cached_property
     def term_dict(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.term_dict)
 
-    @property
+    @functools.cached_property
     def hints(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.hints)
 
-    @property
+    @functools.cached_property
     def stats(self) -> pd.DataFrame:
-        if self._stats is None:
-            self._stats = pd.read_parquet(self.paths.stats)
-        return self._stats
+        return pd.read_parquet(self.paths.stats)
 
     def field_stats(self, field: str) -> tuple[int, float]:
         row = self.stats[self.stats["field"] == field]

@@ -761,9 +761,11 @@ def group_quantiles(
             )
         )
         width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_buckets))
+        # a range narrower than ~2e-320 underflows width to 0: such a
+        # group is one bucket, like a single-value one
         bkt = (
             F.when(F.isnan(vd), F.lit(n_buckets - 1))
-            .when(F.col("_hi") == F.col("_lo"), F.lit(0))
+            .when((F.col("_hi") == F.col("_lo")) | (width == 0), F.lit(0))
             .otherwise(
                 F.least(
                     F.floor((vd - F.col("_lo")) / width).cast("int"),
@@ -771,9 +773,11 @@ def group_quantiles(
                 )
             )
         )
-        vcb = vc.join(mm, group_col, "left").select(
-            group_col, value_col, "_c", bkt.alias("_b")
-        )
+        # the group joins are null-safe: a NULL group is a group
+        mm = mm.withColumnRenamed(group_col, "_g")
+        vcb = vc.join(
+            mm, vc[group_col].eqNullSafe(mm["_g"]), "left"
+        ).select(group_col, value_col, "_c", bkt.alias("_b"))
         b_cnt = vcb.groupBy(group_col, "_b").agg(
             F.sum("_c").alias("_bc")
         )
@@ -783,8 +787,8 @@ def group_quantiles(
             .rowsBetween(SparkWindow.unboundedPreceding, -1)
         )
         offs = b_cnt.select(
-            group_col,
-            "_b",
+            F.col(group_col).alias("_g"),
+            F.col("_b").alias("_ob"),
             F.coalesce(F.sum("_bc").over(woff), F.lit(0)).alias("_off"),
             F.sum("_bc")
             .over(SparkWindow.partitionBy(group_col))
@@ -797,7 +801,11 @@ def group_quantiles(
                 SparkWindow.unboundedPreceding, SparkWindow.currentRow
             )
         )
-        cum = vcb.join(offs, [group_col, "_b"]).select(
+        cum = vcb.join(
+            offs,
+            vcb[group_col].eqNullSafe(offs["_g"])
+            & (vcb["_b"] == offs["_ob"]),
+        ).select(
             group_col,
             value_col,
             (F.col("_off") + F.sum("_c").over(win)).alias("_cum"),

@@ -326,34 +326,6 @@ def _minhash_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 8,
-) -> DataFrame:
-    """(doc_id, seed, minhash): minhash = min over shingles of the
-    seed-th universal hash of the shingle fingerprint — deterministic
-    and engine-portable (md5-derived fingerprint + integer arithmetic
-    reproduce identically anywhere). Computed as one wide aggregation
-    then unpivoted (narrow, no extra shuffle)."""
-    wide = _minhash_wide(df, id_col, text_col, n, num_hashes)
-    unpivot = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("seed"), F.col(f"m{i}").alias("minhash")
-                )
-                for i in range(num_hashes)
-            ]
-        )
-    ).alias("sm")
-    return wide.select("doc_id", unpivot).select(
-        "doc_id", "sm.seed", "sm.minhash"
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

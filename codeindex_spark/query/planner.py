@@ -22,7 +22,10 @@ Execution shape (the "joins" of an IR engine, SURVEY.md §2.4):
    the docs table, semi-joined with scored docs. BM25 statistics stay
    corpus-global, like Lucene filter (non-scoring) clauses.
 5. Top-k — orderBy(score desc, doc_id asc).limit(k) — Catalyst
-   TakeOrderedAndProject (per-partition heap + driver merge).
+   TakeOrderedAndProject (per-partition heap + driver merge). With
+   doc metadata, the <= k top rows join the docs table and the plan
+   again ends in TakeOrderedAndProject, not a range-partitioned
+   re-sort.
 
 Scoring: BM25 (k1/b from index params),
 idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene BM25Similarity form),
@@ -1344,8 +1347,13 @@ class SearchEngine:
             meta = self.reader.docs.select(
                 "doc_id", "repo", "path", "commit", "lang", "file_name", "file_ext"
             )
-            top = top.join(meta, "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
+            # the join on unique doc_id keeps the <= k top rows, so
+            # ordering again with the same limit ends the plan in a
+            # TakeOrderedAndProject instead of a range-partitioned sort
+            top = (
+                top.join(meta, "doc_id")
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(k)
             )
         return top
 

@@ -80,22 +80,6 @@ def _run_stream_to_memory(
     return spark.table(query_name)
 
 
-def stream_windowed_counts(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    query_name: str = "windowed_events",
-):
-    """File-source stream -> watermark -> tumbling windows -> complete
-    in-memory sink (availableNow trigger: drain-and-stop micro-batch,
-    the testable stand-in for a continuous cluster stream)."""
-    stream = spark.readStream.schema(EVENT_ROW_SCHEMA).json(events_dir)
-    out = windowed_event_counts(stream, window, watermark)
-    return _run_stream_to_memory(spark, out, checkpoint_dir, query_name)
-
-
 def session_event_counts(
     events: DataFrame,
     gap: str = "30 minutes",

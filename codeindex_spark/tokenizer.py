@@ -31,7 +31,6 @@ entry points are Arrow-batched (`pandas_udf` / `mapInPandas`).
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -105,23 +104,6 @@ def doc_term_stats(tokens: list[str]) -> tuple[dict[str, list[int]], int]:
     for i, t in enumerate(tokens):
         positions.setdefault(t, []).append(i)
     return positions, len(tokens)
-
-
-def iter_doc_postings(
-    doc_ids: pd.Series, texts: pd.Series
-) -> Iterator[tuple[int, str, str, int, list[int], int]]:
-    """Yield (doc_id, term_cased, term_lower, tf, positions, doc_len)
-    rows for a batch of documents — one row per distinct CASED term
-    per doc. The lowercased field is derived downstream by merging on
-    lower(term) (position lists concatenated sorted), matching the
-    reference's one-pass / two-field analyzer split
-    (CodeAnalyzer.cs:34-48).
-    """
-    token_lists = tokenize_series(texts)
-    for doc_id, tokens in zip(doc_ids, token_lists):
-        pos_map, dlen = doc_term_stats(tokens)
-        for term, pos in pos_map.items():
-            yield int(doc_id), term, term.lower(), len(pos), pos, dlen
 
 
 # CamelCase / digit-boundary subtoken splitter for the EXTRA

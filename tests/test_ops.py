@@ -1650,6 +1650,40 @@ def test_group_quantiles_edges(spark):
         group_quantiles(df, "g", "v", (1.5,))
 
 
+def test_group_quantiles_null_group_numeric(spark):
+    """A NULL group key is a group on the numeric path too, as on the
+    string path and in SQL GROUP BY."""
+    from codeindex_spark.ops.analysis import group_quantiles
+
+    rows = [("a", 1.0), ("a", 3.0), (None, 2.0), (None, 4.0), (None, 6.0)]
+    num = spark.createDataFrame(rows, "g string, v double")
+    out = {r["g"]: (r["q50"], r["q100"])
+           for r in group_quantiles(num, "g", "v", (0.5, 1.0)).collect()}
+    assert out == {"a": (1.0, 3.0), None: (4.0, 6.0)}
+    txt = spark.createDataFrame(
+        [(g, str(int(v))) for g, v in rows], "g string, v string"
+    )
+    assert {r["g"]: (r["q50"], r["q100"])
+            for r in group_quantiles(txt, "g", "v", (0.5, 1.0)).collect()
+            } == {"a": ("1", "3"), None: ("4", "6")}
+
+
+def test_group_quantiles_degenerate_range(spark):
+    """A group whose range is so narrow that the bucket width
+    underflows to 0 keeps every value (one bucket)."""
+    from codeindex_spark.ops.analysis import group_quantiles
+
+    tiny = 5e-324  # smallest subnormal: (hi - lo) / 4096 == 0.0
+    assert tiny / 4096 == 0.0
+    df = spark.createDataFrame(
+        [("t", 0.0), ("t", tiny), ("t", tiny), ("u", 1.0)],
+        "g string, v double",
+    )
+    out = {r["g"]: (r["q25"], r["q50"], r["q100"])
+           for r in group_quantiles(df, "g", "v", (0.25, 0.5, 1.0)).collect()}
+    assert out == {"t": (0.0, tiny, tiny), "u": (1.0, 1.0, 1.0)}
+
+
 def test_tfidf_cosine_pairs_matches_replay(spark):
     """Bit-exact-to-1e-9 pure-Python replay of the documented scheme
     (tf * ln(N/df), L2 norm, pair dot), including the min_df /

@@ -30,6 +30,31 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _final_plan(df):
+    """Executed physical plan after ``collect()``, unwrapped from the
+    adaptive plan and its result stage."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    if plan.nodeName() == "ResultQueryStage":
+        plan = plan.plan()
+    return plan
+
+
+def _jobs_in(spark, fn) -> list[int]:
+    """Spark job ids launched while ``fn()`` runs (one job group)."""
+    sc = spark.sparkContext
+    group = "plan-shapes-job-count"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_term_query_pushes_field_and_term_to_scan(engine):
     plan = _plan(engine.score(ast.Term("get", "content")))
     # field is a partition dir: must prune, not filter post-scan
@@ -79,6 +104,30 @@ def test_suggest_pushes_field_and_length_window(engine):
     assert "levenshtein" in plan
     # top-k is a TakeOrdered, not a global sort
     assert "TakeOrderedAndProject" in plan
+
+
+def test_search_with_docs_ends_in_take_ordered(engine):
+    """The <= k top rows joined to doc metadata end in one
+    TakeOrderedAndProject: no range-partitioned re-sort exchange."""
+    plan = _final_plan(
+        engine.search(ast.parse_query("get OR string"), k=5, with_docs=True)
+    )
+    assert plan.nodeName() == "TakeOrderedAndProject"
+    assert "rangepartitioning" not in plan.toString()
+
+
+def test_reader_opens_each_frame_once(engine):
+    rdr = engine.reader
+    for name in ("docs", "postings", "term_dict"):
+        assert getattr(rdr, name) is getattr(rdr, name), name
+
+
+def test_warm_search_plans_without_jobs(spark, engine):
+    """With the frames open and the term's df in the dictionary
+    cache, planning a search launches no Spark job."""
+    q = ast.Term("get", "content")
+    engine.search(q, k=5, with_docs=True).collect()
+    assert _jobs_in(spark, lambda: engine.search(q, k=5, with_docs=True)) == []
 
 
 def test_facets_single_group_shuffle(engine):
