@@ -1,27 +1,33 @@
 """Query planner + executor: AST -> DataFrame plan over posting blocks.
 
-Execution shape (the "joins" of an IR engine, SURVEY.md §2.4):
+Every scored surface (score, score_many, search*, count, WAND) runs
+one pipeline (the "joins" of an IR engine, SURVEY.md §2.4):
 
-1. Leaf resolution — wildcard/fuzzy leaves expand against the term
+1. Plan rows — a pure leaf walk assigns leaf ids and lists each
+   leaf's dictionary wants (no Spark); the exact terms of every query
+   in the call resolve in ONE cached dictionary lookup, and
+   wildcard/regexp/fuzzy/range leaves expand against the term
    dictionary. Prefix patterns become a *range* predicate on the
    term-sorted dictionary parquet (row-group pruning); fuzzy uses a
    length window + JVM-side levenshtein. Expansions are capped at
    1024 terms (Lucene's maxClauseCount) deterministically (term asc).
-2. Candidate scan — postings filtered to the query's (field, term)
+   The result is (field, term, leaf_id, slot, idf) mapping rows.
+2. Candidate join — postings filtered to the rows' (field, term)
    set: directory pruning on field, min/max row-group pruning on
    term. A broadcast join attaches (leaf_id, slot, idf) to each block
    row.
-3. Block-aligned evaluation — groupBy(block_id) + applyInPandas: all
-   query terms share doc-aligned blocks (block_id = doc_id //
+3. Block stream — one repartition + sort on block_id and ONE
+   mapInPandas pass that carries a block's rows across Arrow batches:
+   all query terms share doc-aligned blocks (block_id = doc_id //
    BLOCK_SIZE), so boolean intersection / union / difference and
    phrase adjacency are numpy set ops *within one block*, with no
-   doc-level shuffle. Posting-list intersection therefore costs one
-   equi-shuffle on block_id, the distributed analog of Lucene's
-   skip-list merge.
-4. Metadata filters (repo/lang/ext/path) are DataFrame predicates on
-   the docs table, semi-joined with scored docs. BM25 statistics stay
-   corpus-global, like Lucene filter (non-scoring) clauses.
-5. Top-k — orderBy(score desc, doc_id asc).limit(k) — Catalyst
+   doc-level shuffle — the distributed analog of Lucene's skip-list
+   merge. Pure disjunctions take a fully vectorized kernel; other
+   trees the per-block tree kernel.
+4. Collector — metadata filters (repo/lang/ext/path) are DataFrame
+   predicates on the docs table, semi-joined with scored docs (BM25
+   statistics stay corpus-global, like Lucene filter clauses); top-k
+   is orderBy(score desc, doc_id asc).limit(k) — Catalyst
    TakeOrderedAndProject (per-partition heap + driver merge). With
    doc metadata, the <= k top rows join the docs table and the plan
    again ends in TakeOrderedAndProject, not a range-partitioned
@@ -40,6 +46,7 @@ from __future__ import annotations
 import math
 import os
 import re
+from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
@@ -57,6 +64,16 @@ from codeindex_spark.query.luceneregex import (
 )
 
 MAX_EXPANSIONS = 1024  # Lucene BooleanQuery.maxClauseCount parity
+
+# Mapping-row slot kinds. A phrase row carries its slot index (>= 0);
+# every other row carries one of these negative kinds, which tells the
+# tree kernel how to evaluate it.
+SLOT_TERM = -1  # term / expansion row: contributions sum per doc
+SLOT_SYNONYM = -2  # blended member row: tf sums, saturates once
+SLOT_SPAN_FIRST = -3  # member row: positions < end count
+SLOT_SPAN_NOT_INC = -4  # include member row
+SLOT_SPAN_NOT_EXC = -5  # exclude member row, idf 0 (a gate only)
+SLOT_SPAN_OR = -6  # plan-time only: its rows go out as SLOT_SYNONYM
 
 SCORE_SCHEMA = T.StructType(
     [
@@ -427,13 +444,13 @@ _MISS = object()  # sentinel: distinguishes "not cached" from "df is None"
 
 
 def _partial_topn_fn(gf: str, tf: str, pg: int):
-    """Arrow partial top-n combine shared by search_collapse and
-    search_groups: per partition, keep at most ``pg`` rows per ``gf``
-    value ordered (score desc, ``tf`` asc) — the map-side combine of
-    grouped top-n, holding <= groups-in-partition x pg rows. Null
-    group keys are preserved (dropna=False) so a nullable stored
-    column loses no docs at the combine; callers that must exclude
-    null groups filter before mapping."""
+    """Arrow partial top-n combine shared by search_many,
+    search_collapse and search_groups: per partition, keep at most
+    ``pg`` rows per ``gf`` value ordered (score desc, ``tf`` asc) —
+    the map-side combine of grouped top-n, holding <= groups-in-
+    partition x pg rows. Null group keys are preserved (dropna=False)
+    so a nullable stored column loses no docs at the combine; callers
+    that must exclude null groups filter before mapping."""
 
     def partial_topn(batches):
         acc = None
@@ -449,11 +466,70 @@ def _partial_topn_fn(gf: str, tf: str, pg: int):
     return partial_topn
 
 
+def _as_root(query: ast.Node | str, case_sensitive: bool) -> ast.Node:
+    """Parse a query string; an already-built AST passes through."""
+    if isinstance(query, str):
+        return ast.parse_query(query, case_sensitive)
+    return query
+
+
+def _dict_slice(td: DataFrame, limit: int = MAX_EXPANSIONS) -> list:
+    """The first ``limit`` (term, df) rows of a dictionary slice in
+    term order — the deterministic expansion cap."""
+    return td.select("term", "df").orderBy("term").limit(limit).collect()
+
+
+def _page_after(scored: DataFrame, after: tuple[float, int]) -> DataFrame:
+    """Rows strictly after the (score, doc_id) anchor in (score desc,
+    doc_id asc) order — two scalar literals in a JVM predicate."""
+    a_score, a_doc = float(after[0]), int(after[1])
+    return scored.filter(
+        (F.col("score") < F.lit(a_score))
+        | (
+            (F.col("score") == F.lit(a_score))
+            & (F.col("doc_id") > F.lit(a_doc))
+        )
+    )
+
+
+def _score_blocks(
+    candidates: DataFrame, kernel, schema: T.StructType = SCORE_SCHEMA
+) -> DataFrame:
+    """The block stream every scored surface ends in: candidates
+    shuffle on block_id, sort within partitions, and ONE mapInPandas
+    pass runs ``kernel`` over whole block runs — the rows of the last
+    block in an Arrow batch carry into the next batch, so no block is
+    ever split across kernel calls (one pass instead of a grouped map
+    per block). ``kernel`` maps a block-sorted body to ``schema``
+    rows."""
+
+    def stream(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None and len(carry):
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+                carry = None
+            if len(pdf) == 0:
+                continue
+            bids = pdf["block_id"].to_numpy()
+            in_last = bids == bids[-1]
+            carry = pdf[in_last]
+            body = pdf[~in_last]
+            if len(body):
+                yield kernel(body)
+        if carry is not None and len(carry):
+            yield kernel(carry)
+
+    shuffled = candidates.repartition(F.col("block_id")).sortWithinPartitions(
+        "block_id"
+    )
+    return shuffled.mapInPandas(stream, schema=schema)
+
+
 class SearchEngine:
-    def __init__(self, reader: IndexReader, dict_cache: bool = True):
+    def __init__(self, reader: IndexReader):
         self.reader = reader
         self.params = reader.params
-        self._cache_enabled = dict_cache
         self._dict_cache: dict[tuple[str, str], int | None] = {}
         self._expand_cache: dict[tuple, list] = {}
 
@@ -484,17 +560,17 @@ class SearchEngine:
         fn = cls._SCORE_MODES[score_mode]
         return (F.lit(0.0) if fn is None else fn("score")).alias("score")
 
-    def _semi_join_live(self, df: DataFrame) -> DataFrame:
+    def _semi_join_live(self, df: DataFrame, live=_MISS) -> DataFrame:
         """Tombstone guard shared by the query surfaces: semi-join a
         doc_id-keyed frame with the reader's live-doc set when one
         exists (incremental indexes carry deleted/replaced docs in
-        their postings until compaction)."""
-        live = getattr(self.reader, "live_doc_ids", lambda: None)()
+        their postings until compaction). ``live`` passes in a set
+        the caller already opened."""
+        if live is _MISS:
+            live = getattr(self.reader, "live_doc_ids", lambda: None)()
         return df if live is None else df.join(live, "doc_id", "left_semi")
 
     def _cache_put(self, cache: dict, cap: int, key, value) -> None:
-        if not self._cache_enabled:
-            return
         if len(cache) >= cap:  # drop the oldest half (insertion order)
             for k in list(cache)[: cap // 2]:
                 del cache[k]
@@ -503,8 +579,8 @@ class SearchEngine:
     # ---------- leaf expansion ----------
 
     def _expand(self, field: str, leaf: ast.Node) -> list[tuple[str, int]]:
-        """Resolve a leaf to [(term, df)] against the term dictionary."""
-        ck = None
+        """Resolve a multi-term leaf (Wildcard / Regexp / Fuzzy /
+        Range) to [(term, df)] against the term dictionary."""
         if isinstance(leaf, ast.Wildcard):
             ck = (field, "w", leaf.pattern)
         elif isinstance(leaf, ast.Regexp):
@@ -513,13 +589,22 @@ class SearchEngine:
             ck = (field, "f", leaf.term, leaf.max_edits)
         elif isinstance(leaf, ast.Range):
             ck = (field, "r", leaf.lo, leaf.hi, leaf.lo_inc, leaf.hi_inc)
-        if ck is not None and ck in self._expand_cache:
+        else:
+            raise TypeError(leaf)
+        if ck in self._expand_cache:
             return self._expand_cache[ck]
         td = self.reader.term_dict.filter(F.col("field") == field)
-        if isinstance(leaf, ast.Term):
-            rows = td.filter(F.col("term") == leaf.term).select("term", "df").collect()
-        elif isinstance(leaf, ast.Wildcard):
-            rows = self._expand_pattern(td, leaf.pattern)
+        if isinstance(leaf, ast.Wildcard):
+            prefix = literal_prefix(leaf.pattern)
+            cond = F.lit(True)
+            if prefix:
+                # range predicate on the sorted dictionary — row-group
+                # pruned via parquet min/max stats
+                cond = F.col("term").startswith(prefix)
+            if leaf.pattern != prefix + "*":  # more than a plain prefix
+                rx = wildcard_to_regex(leaf.pattern)
+                cond = cond & F.col("term").rlike(rx)
+            rows = _dict_slice(td.filter(cond))
         elif isinstance(leaf, ast.Regexp) and uses_extended_ops(
             leaf.pattern
         ):
@@ -541,15 +626,11 @@ class SearchEngine:
                 pfx = matcher.literal_prefix()
                 if pfx:
                     cand = cand.filter(F.col("term").startswith(pfx))
-                rows = (
-                    cand.select("term", "df")
-                    .mapInPandas(
+                rows = _dict_slice(
+                    cand.select("term", "df").mapInPandas(
                         _dfa_filter_kernel(matcher),
                         schema="term string, df long",
                     )
-                    .orderBy("term")
-                    .limit(MAX_EXPANSIONS)
-                    .collect()
                 )
         elif isinstance(leaf, ast.Regexp):
             # anchored full match over the dictionary (Lucene
@@ -577,13 +658,7 @@ class SearchEngine:
             pfx = regex_literal_prefix(pattern)
             if pfx:
                 cond = F.col("term").startswith(pfx) & cond
-            rows = (
-                td.filter(cond)
-                .select("term", "df")
-                .orderBy("term")
-                .limit(MAX_EXPANSIONS)
-                .collect()
-            )
+            rows = _dict_slice(td.filter(cond))
         elif isinstance(leaf, ast.Range):
             # pure range predicate on the sorted dictionary — parquet
             # min/max row-group pruning applies, same as a wildcard's
@@ -595,14 +670,8 @@ class SearchEngine:
             if leaf.hi is not None:
                 c = F.col("term") <= leaf.hi if leaf.hi_inc else F.col("term") < leaf.hi
                 cond = cond & c
-            rows = (
-                td.filter(cond)
-                .select("term", "df")
-                .orderBy("term")
-                .limit(MAX_EXPANSIONS)
-                .collect()
-            )
-        elif isinstance(leaf, ast.Fuzzy):
+            rows = _dict_slice(td.filter(cond))
+        else:  # Fuzzy
             q = leaf.term
             k = leaf.max_edits
             # coarse JVM prefilter: length window ±k and plain
@@ -610,49 +679,19 @@ class SearchEngine:
             # a levenshtein sequence of length <= 2k, a transposition
             # being two substitutions) — the exact transposition-aware
             # distance refines the small collected candidate set
-            cand = (
+            cand = _dict_slice(
                 td.filter(
                     (F.length("term") >= len(q) - k)
                     & (F.length("term") <= len(q) + k)
-                )
-                .filter(F.levenshtein(F.col("term"), F.lit(q)) <= 2 * k)
-                .select("term", "df")
-                .orderBy("term")
-                .limit(4 * MAX_EXPANSIONS)
-                .collect()
+                ).filter(F.levenshtein(F.col("term"), F.lit(q)) <= 2 * k),
+                4 * MAX_EXPANSIONS,
             )
             rows = [
                 r for r in cand if damerau_distance(r["term"], q, k) <= k
             ][:MAX_EXPANSIONS]
-        else:
-            raise TypeError(leaf)
         out = [(r["term"], r["df"]) for r in rows]
-        if ck is not None:
-            self._cache_put(self._expand_cache, EXPAND_CACHE_CAP, ck, out)
+        self._cache_put(self._expand_cache, EXPAND_CACHE_CAP, ck, out)
         return out
-
-    def _expand_pattern(self, td: DataFrame, pattern: str) -> list:
-        prefix = literal_prefix(pattern)
-        cond = F.lit(True)
-        if prefix:
-            # range predicate on the sorted dictionary — row-group
-            # pruned via parquet min/max stats
-            cond = F.col("term").startswith(prefix)
-        if pattern != prefix + "*":  # more structure than plain prefix
-            cond = cond & F.col("term").rlike(wildcard_to_regex(pattern))
-        return (
-            td.filter(cond)
-            .select("term", "df")
-            .orderBy("term")
-            .limit(MAX_EXPANSIONS)
-            .collect()
-        )
-
-    def _expand_slot(self, field: str, slot: str) -> list[tuple[str, int]]:
-        if "*" in slot or "?" in slot:
-            td = self.reader.term_dict.filter(F.col("field") == field)
-            return [(r["term"], r["df"]) for r in self._expand_pattern(td, slot)]
-        return self._expand(field, ast.Term(slot, field))
 
     # ---------- planning ----------
 
@@ -694,29 +733,28 @@ class SearchEngine:
                 )
         return exact_df
 
-    def _plan_rows(
-        self,
-        root: ast.Node,
-        exact_df: dict[tuple[str, str], int] | None = None,
-    ) -> tuple[list[dict], dict[ast.Node, int]]:
-        """Assign leaf ids; build (field, term, leaf_id, slot, idf)
-        mapping rows. Identical leaves share an id (same semantics).
-
-        All exact-term lookups across every leaf and phrase slot run
-        as ONE batched dictionary job (score_many shares one lookup
-        across the whole query batch via ``exact_df``); only
-        wildcard/fuzzy expansions need their own predicate scans.
-        """
+    def _walk_leaves(self, root: ast.Node):
+        """Pure leaf walk of one query tree (no Spark). Returns
+        (leaf_ids, wants, exact_terms): identical leaves share a leaf
+        id (same semantics); each want is (leaf, leaf_id, slot, spec)
+        with ``spec`` an exact term, a tuple of blended-group member
+        terms, or a multi-term node that expands against the
+        dictionary; ``exact_terms`` maps field -> the exact terms the
+        wants need looked up."""
         leaf_ids: dict[ast.Node, int] = {}
-        wants: list[tuple[int, str, int, object, bool]] = []
+        wants: list[tuple[ast.Node, int, int, object]] = []
         exact_terms: dict[str, set[str]] = {}
-        boost_by_id: dict[int, float] = {}
+
+        def want(leaf, slot, spec):
+            wants.append((leaf, leaf_ids[leaf], slot, spec))
+            if isinstance(spec, (str, tuple)):
+                terms = (spec,) if isinstance(spec, str) else spec
+                exact_terms.setdefault(leaf.field, set()).update(terms)
+
         for leaf in ast.collect_leaves(root):
             if leaf in leaf_ids:
                 continue
-            lid = len(leaf_ids)
-            leaf_ids[leaf] = lid
-            boost_by_id[lid] = float(getattr(leaf, "boost", 1.0))
+            leaf_ids[leaf] = len(leaf_ids)
             fld = leaf.field
             if isinstance(
                 leaf, (ast.Phrase, ast.SpanFirst, ast.SpanNot)
@@ -740,39 +778,32 @@ class SearchEngine:
                         # — the kernel merges them like wildcard
                         # expansions of the same slot
                         for member in slot:
-                            wants.append((lid, fld, slot_idx, member, True))
-                            exact_terms.setdefault(fld, set()).add(member)
-                        continue
-                    is_wild = "*" in slot or "?" in slot
-                    wants.append((lid, fld, slot_idx, slot, not is_wild))
-                    if not is_wild:
-                        exact_terms.setdefault(fld, set()).add(slot)
+                            want(leaf, slot_idx, member)
+                    elif "*" in slot or "?" in slot:
+                        want(leaf, slot_idx, ast.Wildcard(slot, fld))
+                    else:
+                        want(leaf, slot_idx, slot)
             elif isinstance(leaf, ast.Term):
-                wants.append((lid, fld, -1, leaf.term, True))
-                exact_terms.setdefault(fld, set()).add(leaf.term)
+                want(leaf, SLOT_TERM, leaf.term)
             elif isinstance(leaf, ast.Synonyms):
-                # one want for the whole group (slot=-2): blending
-                # needs every member's df at once
+                # one want for the whole group: blending needs every
+                # member's df at once
                 if not leaf.terms:
                     raise ValueError("Synonyms needs at least one term")
-                wants.append((lid, fld, -2, tuple(leaf.terms), True))
-                for t in leaf.terms:
-                    exact_terms.setdefault(fld, set()).add(t)
+                want(leaf, SLOT_SYNONYM, tuple(leaf.terms))
             elif isinstance(leaf, ast.SpanOr):
-                # one want for the whole group (slot=-6): the blended
-                # idf needs every member's df at once (Σ idf, unlike
-                # Synonyms' max-df); tf still merges in-kernel via
-                # the same summed-tf path as slot -2
+                # one want for the whole group: the blended idf needs
+                # every member's df at once (Σ idf, unlike Synonyms'
+                # max-df); tf still merges in-kernel via the same
+                # summed-tf path as Synonyms
                 if not leaf.terms:
                     raise ValueError("SpanOr needs at least one term")
-                wants.append((lid, fld, -6, tuple(leaf.terms), True))
-                for t in leaf.terms:
-                    exact_terms.setdefault(fld, set()).add(t)
+                want(leaf, SLOT_SPAN_OR, tuple(leaf.terms))
             elif isinstance(leaf, ast.SpanFirst):
-                # slot=-3 member rows (one per present member; a
-                # plain-string term is the one-member degenerate):
-                # the kernel unions member positions per doc, counts
-                # only positions < end and saturates ONCE; every row
+                # member rows (one per present member; a plain-string
+                # term is the one-member degenerate): the kernel
+                # unions member positions per doc, counts only
+                # positions < end and saturates ONCE; every row
                 # carries the group's blended idf = Σ member FULL-df
                 # idfs (the SpanOr statistics convention)
                 if leaf.end < 1:
@@ -780,17 +811,14 @@ class SearchEngine:
                 members = ast.span_member_terms(leaf.term)
                 if not members:
                     raise ValueError("SpanFirst needs at least one term")
-                wants.append((lid, fld, -3, members, True))
-                for t in members:
-                    exact_terms.setdefault(fld, set()).add(t)
+                want(leaf, SLOT_SPAN_FIRST, members)
             elif isinstance(leaf, ast.SpanNot):
-                # slot=-4 include / slot=-5 exclude member rows; the
-                # kernel unions each side's member positions per doc
-                # and counts include positions with no exclude
-                # position in [p-pre, p+post]. Include rows carry the
-                # blended Σ include-idf; exclude rows' idf is zeroed
-                # below so the WAND block bound (Σ idf*block_max)
-                # stays tight.
+                # include / exclude member rows; the kernel unions
+                # each side's member positions per doc and counts
+                # include positions with no exclude position in
+                # [p-pre, p+post]. Include rows carry the blended
+                # Σ include-idf; exclude rows' idf is zeroed so the
+                # WAND block bound (Σ idf*block_max) stays tight.
                 if leaf.pre < 0 or leaf.post < 0:
                     raise ValueError("SpanNot pre/post must be >= 0")
                 inc = ast.span_member_terms(leaf.include)
@@ -799,179 +827,150 @@ class SearchEngine:
                     raise ValueError(
                         "SpanNot include/exclude need at least one term"
                     )
-                wants.append((lid, fld, -4, inc, True))
-                wants.append((lid, fld, -5, exc, True))
-                for t in (*inc, *exc):
-                    exact_terms.setdefault(fld, set()).add(t)
+                want(leaf, SLOT_SPAN_NOT_INC, inc)
+                want(leaf, SLOT_SPAN_NOT_EXC, exc)
             else:
-                wants.append((lid, fld, -1, leaf, False))
+                want(leaf, SLOT_TERM, leaf)
+        return leaf_ids, wants, exact_terms
 
-        if exact_df is None:
-            exact_df = self._lookup_exact_df(exact_terms)
-
+    def _mapping_rows(
+        self, wants: list, exact_df: dict[tuple[str, str], int]
+    ) -> list[dict]:
+        """Turn a walk's wants into (field, term, leaf_id, slot, idf)
+        mapping rows: exact terms take their df from ``exact_df``,
+        multi-term nodes expand against the dictionary (cached)."""
         rows: list[dict] = []
-        for lid, fld, slot_idx, spec, exact in wants:
-            leaf_boost = boost_by_id[lid]
+        for leaf, lid, slot, spec in wants:
+            fld = leaf.field
+            # leaf boost (term^2 / "a b"^2) is baked into the row idf:
+            # every scoring path — disjunctive kernel, tree kernel,
+            # phrase slots, and the WAND block upper bound
+            # (idf * block_max) — multiplies this column, so the boost
+            # scales scores AND keeps the pruning bound sound.
+            boost = float(getattr(leaf, "boost", 1.0))
             n_docs, _ = self.reader.field_stats(fld)
-            if slot_idx in (-2, -6, -3, -4, -5):
-                # blended-group rows (one posting row per member, all
-                # carrying the same blended idf; tf merges in-kernel):
-                # slot -2 = SynonymQuery, docFreq = MAX over present
-                # members -> one idf; slot -6 = SpanOrQuery and
-                # slot -3/-4 = SpanFirst/SpanNot-include members,
-                # idf = SUM of the present members' idfs
-                # (BM25Similarity over multiple TermStatistics sums
-                # idfExplain terms); slot -5 = SpanNot-exclude
-                # members, idf 0 (gate only, WAND bound stays tight)
+            if isinstance(spec, tuple):
+                # blended-group rows (one posting row per present
+                # member, all carrying the same blended idf; tf merges
+                # in-kernel): Synonyms = SynonymQuery, docFreq = MAX
+                # over present members -> one idf; SpanOr and
+                # SpanFirst / SpanNot-include members, idf = SUM of
+                # the present members' idfs (BM25Similarity over
+                # multiple TermStatistics sums idfExplain terms);
+                # SpanNot-exclude members, idf 0 (gate only, WAND
+                # bound stays tight)
                 present = [
-                    (t, exact_df.get((fld, t)))
+                    (t, exact_df[(fld, t)])
                     for t in spec
-                    if exact_df.get((fld, t)) is not None
+                    if (fld, t) in exact_df
                 ]
                 if not present:
                     continue
-                if slot_idx == -2:
-                    idf_blend = idf_bm25(
-                        n_docs, max(d for _, d in present)
-                    ) * leaf_boost
-                elif slot_idx == -5:
-                    idf_blend = 0.0
+                if slot == SLOT_SYNONYM:
+                    idf = idf_bm25(n_docs, max(d for _, d in present)) * boost
+                elif slot == SLOT_SPAN_NOT_EXC:
+                    idf = 0.0
                 else:
-                    idf_blend = (
-                        sum(idf_bm25(n_docs, d) for _, d in present)
-                        * leaf_boost
-                    )
-                out_slot = -2 if slot_idx == -6 else slot_idx
-                for term, _ in present:
-                    rows.append(
-                        {
-                            "field": fld,
-                            "term": term,
-                            "leaf_id": lid,
-                            "slot": out_slot,
-                            "idf": idf_blend,
-                        }
-                    )
-                continue
-            if exact:
-                df = exact_df.get((fld, spec))
-                expansions = [(spec, df)] if df is not None else []
-            elif isinstance(spec, str):  # wildcard phrase slot
-                expansions = self._expand_slot(fld, spec)
-            else:  # Wildcard / Fuzzy leaf
-                expansions = self._expand(fld, spec)
-            for term, df in expansions:
+                    idf = sum(idf_bm25(n_docs, d) for _, d in present) * boost
+                slot = SLOT_SYNONYM if slot == SLOT_SPAN_OR else slot
+                term_idfs = [(t, idf) for t, _ in present]
+            else:
+                if isinstance(spec, str):
+                    df = exact_df.get((fld, spec))
+                    found = [] if df is None else [(spec, df)]
+                else:
+                    found = self._expand(fld, spec)
+                term_idfs = [
+                    (t, idf_bm25(n_docs, df) * boost) for t, df in found
+                ]
+            for term, idf in term_idfs:
                 rows.append(
                     {
                         "field": fld,
                         "term": term,
                         "leaf_id": lid,
-                        "slot": slot_idx,
-                        # leaf boost (term^2 / "a b"^2) is baked into
-                        # the row idf: every scoring path — disjunctive
-                        # kernel, tree kernel, phrase slots, and the
-                        # WAND block upper bound (idf * block_max) —
-                        # multiplies this column, so the boost scales
-                        # scores AND keeps the pruning bound sound.
-                        # SpanNot exclude rows (-5) never contribute
-                        # score, so their idf is 0 (keeps WAND tight).
-                        "idf": (
-                            0.0
-                            if slot_idx == -5
-                            else idf_bm25(n_docs, df) * leaf_boost
-                        ),
+                        "slot": slot,
+                        "idf": idf,
                     }
                 )
-        return rows, leaf_ids
+        return rows
+
+    def _plan(
+        self, roots: dict[str, ast.Node]
+    ) -> dict[str, tuple[dict[ast.Node, int], list[dict]]]:
+        """The plan step of every scored surface: walk each root's
+        leaves, resolve the union of their exact terms in ONE
+        dictionary lookup (cached), then build each root's mapping
+        rows. Returns {name: (leaf_ids, rows)} for the roots with at
+        least one row."""
+        walks = {name: self._walk_leaves(root) for name, root in roots.items()}
+        exact_terms: dict[str, set[str]] = {}
+        for _, _, ex in walks.values():
+            for fld, ts in ex.items():
+                exact_terms.setdefault(fld, set()).update(ts)
+        exact_df = self._lookup_exact_df(exact_terms)
+        out = {}
+        for name, (leaf_ids, wants, _) in walks.items():
+            rows = self._mapping_rows(wants, exact_df)
+            if rows:
+                out[name] = (leaf_ids, rows)
+        return out
 
     # ---------- execution ----------
 
-    def _candidates(self, root: ast.Node):
-        """Postings of the query's terms with (leaf_id, slot, idf)
-        attached, plus the kernel closure. Returns (candidates_df,
-        kernel, n_leaf_rows)."""
-        spark = self.reader.spark
-        rows, leaf_ids = self._plan_rows(root)
-        if not rows:
-            return None, None, 0
-        mapping = spark.createDataFrame(pd.DataFrame(rows))
-        fields = sorted({r["field"] for r in rows})
-        terms_by_field = {
-            f: sorted({r["term"] for r in rows if r["field"] == f})
-            for f in fields
-        }
+    def _candidate_join(self, rows: list[dict]) -> DataFrame:
+        """Mapping rows -> candidate postings: the (field, term) isin
+        predicate reaches the postings scan (field directory pruning,
+        term row-group pruning) and the rows broadcast-join on
+        (field, term), attaching (leaf_id, slot, idf) and any extra
+        row columns to each block row."""
+        mapping = self.reader.spark.createDataFrame(pd.DataFrame(rows))
         cond = None
-        for f, ts in terms_by_field.items():
+        for f in sorted({r["field"] for r in rows}):
+            ts = sorted({r["term"] for r in rows if r["field"] == f})
             c = (F.col("field") == f) & F.col("term").isin(ts)
             cond = c if cond is None else (cond | c)
-        candidates = self.reader.postings.filter(cond).join(
+        return self.reader.postings.filter(cond).join(
             F.broadcast(mapping), ["field", "term"]
         )
+
+    def _kernel(self, root: ast.Node, leaf_ids: dict, rows: list[dict]):
+        """Block kernel of one query. Pure disjunctions (keyword,
+        wildcard, fuzzy, OR-of-those — the hot path) take the fully
+        vectorized kernel: every posting row in the batch decodes in
+        ONE pass and scores aggregate with unique+bincount. Identical
+        leaves share a leaf_id, but a clause written twice scores
+        twice (Lucene duplicate-clause semantics), so each leaf is
+        weighted by its occurrence count in the tree. Boolean/phrase
+        trees evaluate per block run in the tree kernel."""
+        fields = sorted({r["field"] for r in rows})
         avgdl = {f: self.reader.field_stats(f)[1] for f in fields}
         k1, b, bsz = self.params.k1, self.params.b, self.params.block_size
         codec = self.params.codec
         if _is_pure_disjunction(root):
-            # identical leaves share a leaf_id, but a clause written
-            # twice scores twice (Lucene duplicate-clause semantics):
-            # weight each leaf by its occurrence count in the tree
-            mult: dict[int, int] = {}
-            for leaf in ast.collect_leaves(root):
-                lid = leaf_ids[leaf]
-                mult[lid] = mult.get(lid, 0) + 1
-            kernel = _make_disjunctive_batch_kernel(
+            mult = Counter(leaf_ids[leaf] for leaf in ast.collect_leaves(root))
+            return _make_disjunctive_batch_kernel(
                 avgdl, k1, b, bsz, mult, codec
             )
-            return candidates, ("batch", kernel), len(rows)
-        kernel = _make_tree_batch_kernel(
+        return _make_tree_batch_kernel(
             root, leaf_ids, avgdl, k1, b, bsz, codec
         )
-        return candidates, ("batch", kernel), len(rows)
 
-    def _score_stream(self, candidates: DataFrame, kernel_spec) -> DataFrame:
-        """Evaluate the scoring kernel over a block-sorted stream.
-
-        One mapInPandas pass with carry across Arrow batches instead
-        of a grouped-map per block. Pure-disjunctive queries (keyword,
-        wildcard, fuzzy, OR-of-those — the hot path) take a fully
-        vectorized batch kernel: every posting row in the batch is
-        decoded in ONE varint pass and scores aggregate with
-        unique+bincount; boolean/phrase trees evaluate per block run.
-        """
-        mode, kernel = kernel_spec
-
-        def stream(batches):
-            carry = None
-            for pdf in batches:
-                if carry is not None and len(carry):
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                    carry = None
-                if len(pdf) == 0:
-                    continue
-                bids = pdf["block_id"].to_numpy()
-                in_last = bids == bids[-1]
-                carry = pdf[in_last]
-                body = pdf[~in_last]
-                if len(body):
-                    yield kernel(body)
-            if carry is not None and len(carry):
-                yield kernel(carry)
-
-        shuffled = candidates.repartition(F.col("block_id")).sortWithinPartitions(
-            "block_id"
-        )
-        return shuffled.mapInPandas(stream, schema=SCORE_SCHEMA)
+    def _candidates(self, root: ast.Node):
+        """Candidate postings of one query plus its block kernel, or
+        (None, None) when no leaf resolves to a dictionary term."""
+        planned = self._plan({"": root}).get("")
+        if planned is None:
+            return None, None
+        leaf_ids, rows = planned
+        return self._candidate_join(rows), self._kernel(root, leaf_ids, rows)
 
     def score(self, query: ast.Node | str, case_sensitive: bool = False) -> DataFrame:
         """Evaluate to a (doc_id, score) DataFrame of matching docs."""
-        root = (
-            ast.parse_query(query, case_sensitive)
-            if isinstance(query, str)
-            else query
-        )
-        candidates, kernel, n = self._candidates(root)
+        candidates, kernel = self._candidates(_as_root(query, case_sensitive))
         if candidates is None:
             return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
-        return self._score_stream(candidates, kernel)
+        return _score_blocks(candidates, kernel)
 
     def explain(
         self, query: ast.Node | str, case_sensitive: bool = False
@@ -994,11 +993,7 @@ class SearchEngine:
         query through score_many — shared dictionary lookup, ONE
         posting scan for total + all leaves — then two joins pivot
         the batch into the breakdown."""
-        root = (
-            ast.parse_query(query, case_sensitive)
-            if isinstance(query, str)
-            else query
-        )
+        root = _as_root(query, case_sensitive)
         leaves: list = []
         for leaf in ast.collect_leaves(root):
             if leaf not in leaves:
@@ -1037,84 +1032,24 @@ class SearchEngine:
         Per-query execution pays the fixed Spark job cost (scan +
         shuffle + Python stage launch) once per query; a search tier
         serving many concurrent queries over a 1000-executor index
-        should amortize it. The per-query (leaf_id, slot, idf) mapping
-        rows are tagged with the query name, the posting filter is the
-        union of every query's terms, and the block kernel dispatches
-        each query's slice of the decoded batch to that query's
-        existing kernel closure — semantics identical to score()."""
-        spark = self.reader.spark
-        all_rows: list[dict] = []
-        kernels: dict[str, tuple] = {}
-        k1, b, bsz = self.params.k1, self.params.b, self.params.block_size
-        codec = self.params.codec
+        should amortize it. The plan step resolves every query's
+        exact terms in one dictionary lookup, the per-query mapping
+        rows are tagged with the query name, the posting filter is
+        the union of every query's terms, and the block kernel
+        dispatches each query's slice of the decoded batch to that
+        query's own kernel — semantics identical to score()."""
         roots = {
-            qname: (
-                ast.parse_query(query, case_sensitive)
-                if isinstance(query, str)
-                else query
-            )
-            for qname, query in queries.items()
+            q: _as_root(query, case_sensitive) for q, query in queries.items()
         }
-        # ONE dictionary job for every exact term of every query in
-        # the batch (wildcard/fuzzy expansions still scan per leaf)
-        all_exact: dict[str, set[str]] = {}
-        for root in roots.values():
-            for leaf in ast.collect_leaves(root):
-                if isinstance(leaf, ast.Phrase):
-                    for slot in leaf.slots:
-                        if isinstance(slot, tuple):
-                            for t in slot:
-                                all_exact.setdefault(
-                                    leaf.field, set()
-                                ).add(t)
-                        elif "*" not in slot and "?" not in slot:
-                            all_exact.setdefault(leaf.field, set()).add(slot)
-                elif isinstance(leaf, ast.Term):
-                    all_exact.setdefault(leaf.field, set()).add(leaf.term)
-                elif isinstance(leaf, (ast.Synonyms, ast.SpanOr)):
-                    for t in leaf.terms:
-                        all_exact.setdefault(leaf.field, set()).add(t)
-                elif isinstance(leaf, ast.SpanFirst):
-                    for t in ast.span_member_terms(leaf.term):
-                        all_exact.setdefault(leaf.field, set()).add(t)
-                elif isinstance(leaf, ast.SpanNot):
-                    for t in (
-                        *ast.span_member_terms(leaf.include),
-                        *ast.span_member_terms(leaf.exclude),
-                    ):
-                        all_exact.setdefault(leaf.field, set()).add(t)
-        shared_df = self._lookup_exact_df(all_exact)
-        for qname, root in roots.items():
-            rows, leaf_ids = self._plan_rows(root, exact_df=shared_df)
-            if not rows:
-                continue
-            for r in rows:
-                all_rows.append({**r, "qid": qname})
-            fields = sorted({r["field"] for r in rows})
-            avgdl = {f: self.reader.field_stats(f)[1] for f in fields}
-            if _is_pure_disjunction(root):
-                mult: dict[int, int] = {}
-                for leaf in ast.collect_leaves(root):
-                    lid = leaf_ids[leaf]
-                    mult[lid] = mult.get(lid, 0) + 1
-                kernels[qname] = _make_disjunctive_batch_kernel(
-                    avgdl, k1, b, bsz, mult, codec
-                )
-            else:
-                kernels[qname] = _make_tree_batch_kernel(
-                    root, leaf_ids, avgdl, k1, b, bsz, codec
-                )
-        if not all_rows:
-            return spark.createDataFrame([], MULTI_SCORE_SCHEMA)
-        mapping = spark.createDataFrame(pd.DataFrame(all_rows))
-        fields = sorted({r["field"] for r in all_rows})
-        cond = None
-        for f in fields:
-            ts = sorted({r["term"] for r in all_rows if r["field"] == f})
-            c = (F.col("field") == f) & F.col("term").isin(ts)
-            cond = c if cond is None else (cond | c)
-        candidates = self.reader.postings.filter(cond).join(
-            F.broadcast(mapping), ["field", "term"]
+        planned = self._plan(roots)
+        if not planned:
+            return self.reader.spark.createDataFrame([], MULTI_SCORE_SCHEMA)
+        kernels = {
+            q: self._kernel(roots[q], leaf_ids, rows)
+            for q, (leaf_ids, rows) in planned.items()
+        }
+        candidates = self._candidate_join(
+            [{**r, "qid": q} for q, (_, rows) in planned.items() for r in rows]
         )
 
         def combined(body: pd.DataFrame) -> pd.DataFrame:
@@ -1134,27 +1069,7 @@ class SearchEngine:
                 )
             return pd.concat(outs, ignore_index=True)
 
-        def stream(batches):
-            carry = None
-            for pdf in batches:
-                if carry is not None and len(carry):
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                    carry = None
-                if len(pdf) == 0:
-                    continue
-                bids = pdf["block_id"].to_numpy()
-                in_last = bids == bids[-1]
-                carry = pdf[in_last]
-                body = pdf[~in_last]
-                if len(body):
-                    yield combined(body)
-            if carry is not None and len(carry):
-                yield combined(carry)
-
-        shuffled = candidates.repartition(
-            F.col("block_id")
-        ).sortWithinPartitions("block_id")
-        return shuffled.mapInPandas(stream, schema=MULTI_SCORE_SCHEMA)
+        return _score_blocks(candidates, combined, MULTI_SCORE_SCHEMA)
 
     def search_many(
         self,
@@ -1171,22 +1086,9 @@ class SearchEngine:
         Window.partitionBy(query) would funnel every match of a
         stop-word-grade query into one reducer."""
         scored = self._semi_join_live(self.score_many(queries, case_sensitive))
-
-        def partial_topk(batches):
-            best: dict[str, pd.DataFrame] = {}
-            for pdf in batches:
-                for q, sub in pdf.groupby("query", sort=False):
-                    cur = best.get(q)
-                    allr = pd.concat([cur, sub]) if cur is not None else sub
-                    best[q] = allr.sort_values(
-                        ["score", "doc_id"],
-                        ascending=[False, True],
-                        kind="mergesort",
-                    ).head(k)
-            if best:
-                yield pd.concat(best.values(), ignore_index=True)
-
-        pruned = scored.mapInPandas(partial_topk, schema=MULTI_SCORE_SCHEMA)
+        pruned = scored.mapInPandas(
+            _partial_topn_fn("query", "doc_id", k), schema=MULTI_SCORE_SCHEMA
+        )
         w = Window.partitionBy("query").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -1229,38 +1131,25 @@ class SearchEngine:
              exact-score them, θ = k-th best;
           3. decode blocks with UB >= θ, exact top-k.
         """
-        root = (
-            ast.parse_query(query, case_sensitive)
-            if isinstance(query, str)
-            else query
-        )
-        candidates, kernel, _ = self._candidates(root)
+        root = _as_root(query, case_sensitive)
+        candidates, kernel = self._candidates(root)
         spark = self.reader.spark
         if candidates is None:
             return spark.createDataFrame([], SCORE_SCHEMA)
 
-        def page(df):
-            if after is None:
-                return df
-            a_s, a_d = float(after[0]), int(after[1])
-            return df.filter(
-                (F.col("score") < F.lit(a_s))
-                | (
-                    (F.col("score") == F.lit(a_s))
-                    & (F.col("doc_id") > F.lit(a_d))
-                )
-            )
+        def top(cands: DataFrame) -> list:
+            """Exact top-k rows of a candidate slice (after the page
+            anchor, when paging)."""
+            scored = _score_blocks(cands, kernel)
+            if after is not None:
+                scored = _page_after(scored, after)
+            top_k = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return top_k.collect()
 
         if _contains_constant_score(root):
             # a ConstantScore boost is not bounded by the BM25 block
             # maxima, so block pruning is unsound — score exactly
-            rows = (
-                page(self._score_stream(candidates, kernel))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            return spark.createDataFrame(rows, schema=SCORE_SCHEMA)
+            return spark.createDataFrame(top(candidates), schema=SCORE_SCHEMA)
         # Cache ONLY the per-block metadata aggregate (one small row
         # per block) — never the candidate posting rows themselves: a
         # stop-word-grade term's postings are enormous at scale, while
@@ -1286,45 +1175,33 @@ class SearchEngine:
                 r["block_id"]
                 for r in meta.orderBy(F.desc("ub")).limit(n_seed).collect()
             ]
-            seed_scored = (
-                page(
-                    self._score_stream(
-                        candidates.filter(F.col("block_id").isin(seed_ids)),
-                        kernel,
-                    )
-                )
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
+            seed_scored = top(
+                candidates.filter(F.col("block_id").isin(seed_ids))
             )
             if len(seed_scored) < k:
                 # not enough docs to establish θ — fall back to exact
-                rows = (
-                    page(self._score_stream(candidates, kernel))
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k)
-                    .collect()
-                )
+                rows = top(candidates)
             else:
                 theta = seed_scored[-1]["score"]
                 keep = meta.filter(F.col("ub") >= theta).select("block_id")
-                rows = (
-                    page(
-                        self._score_stream(
-                            candidates.join(
-                                F.broadcast(keep), "block_id", "left_semi"
-                            ),
-                            kernel,
-                        )
-                    )
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k)
-                    .collect()
+                rows = top(
+                    candidates.join(F.broadcast(keep), "block_id", "left_semi")
                 )
             # materialized (<= k rows) so the cache can be released
             return spark.createDataFrame(rows, schema=SCORE_SCHEMA)
         finally:
             meta.unpersist(blocking=False)
+
+    def _live_filtered(
+        self, scored: DataFrame, filters: Filters | None, live=_MISS
+    ) -> DataFrame:
+        # tombstone-aware readers (incremental MultiReader) expose the
+        # live doc set; postings may still contain replaced/deleted docs
+        scored = self._semi_join_live(scored, live)
+        if filters is not None and not filters.empty:
+            allowed = filters.apply(self.reader.docs).select("doc_id")
+            scored = scored.join(allowed, "doc_id", "left_semi")
+        return scored
 
     def _live_filtered_scores(
         self,
@@ -1332,14 +1209,7 @@ class SearchEngine:
         filters: Filters | None,
         case_sensitive: bool,
     ) -> DataFrame:
-        scored = self.score(query, case_sensitive)
-        # tombstone-aware readers (incremental MultiReader) expose the
-        # live doc set; postings may still contain replaced/deleted docs
-        scored = self._semi_join_live(scored)
-        if filters is not None and not filters.empty:
-            allowed = filters.apply(self.reader.docs).select("doc_id")
-            scored = scored.join(allowed, "doc_id", "left_semi")
-        return scored
+        return self._live_filtered(self.score(query, case_sensitive), filters)
 
     def _collect_top(self, scored: DataFrame, k: int, with_docs: bool):
         top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1395,16 +1265,8 @@ class SearchEngine:
         filter whose matches are sparse this beats the
         collect-k*N-and-slice idiom by exactly the pages you skip.
         """
-        a_score, a_doc = float(after[0]), int(after[1])
         scored = self._live_filtered_scores(query, filters, case_sensitive)
-        scored = scored.filter(
-            (F.col("score") < F.lit(a_score))
-            | (
-                (F.col("score") == F.lit(a_score))
-                & (F.col("doc_id") > F.lit(a_doc))
-            )
-        )
-        return self._collect_top(scored, k, with_docs)
+        return self._collect_top(_page_after(scored, after), k, with_docs)
 
     def count(
         self,
@@ -1421,37 +1283,27 @@ class SearchEngine:
         Short circuits, mirroring Lucene's public count() behavior:
         - a lone TermQuery with no tombstones and no filters answers
           straight from the term dictionary's df — zero posting
-          decode, one dictionary point lookup (Lucene reads
+          decode, one cached dictionary point lookup (Lucene reads
           TermStates.docFreq when liveDocs is null);
-        - a lone match-all (None query) with no tombstones/filters is
-          the doc count;
         - everything else counts the match stream: one posting decode
           pass, an AQE-sized count aggregate, no sort and no driver
           materialization of matches.
         """
-        root = (
-            ast.parse_query(query, case_sensitive)
-            if isinstance(query, str)
-            else query
-        )
+        root = _as_root(query, case_sensitive)
         live = getattr(self.reader, "live_doc_ids", lambda: None)()
-        unfiltered = (filters is None or filters.empty) and live is None
-        if unfiltered and isinstance(root, ast.Term):
+        if isinstance(root, ast.Term) and live is None and (
+            filters is None or filters.empty
+        ):
             # boost never changes the match set, so any boost value
             # still short-circuits; df in a plain reader counts each
             # doc once (segments are doc-disjoint after merge)
-            pairs = self._expand(root.field, root)
-            return int(sum(df for _, df in pairs))
-        candidates, kernel, _ = self._candidates(root)
+            key = (root.field, root.term)
+            return self._lookup_exact_df({key[0]: {key[1]}}).get(key, 0)
+        candidates, kernel = self._candidates(root)
         if candidates is None:
             return 0
-        matches = self._score_stream(candidates, kernel)
-        if live is not None:
-            matches = matches.join(live, "doc_id", "left_semi")
-        if filters is not None and not filters.empty:
-            allowed = filters.apply(self.reader.docs).select("doc_id")
-            matches = matches.join(allowed, "doc_id", "left_semi")
-        return matches.count()
+        matches = _score_blocks(candidates, kernel)
+        return self._live_filtered(matches, filters, live).count()
 
     def search_collapse(
         self,
@@ -2567,8 +2419,7 @@ class SearchEngine:
             df = int(r["df"])
             if df < min_doc_freq:
                 continue
-            idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-            ranked.append((tf[r["term"]] * idf, r["term"]))
+            ranked.append((tf[r["term"]] * idf_bm25(n_docs, df), r["term"]))
         ranked.sort(key=lambda p: (-p[0], p[1]))
         chosen = [t for _, t in ranked[:max_query_terms]]
         if not chosen:
@@ -3001,7 +2852,7 @@ def _make_tree_batch_kernel(
                 es, ee = es_r[row], ee_r[row]
                 docs = docs_all[es:ee]
                 contrib = contrib_all[es:ee]
-                if slot_r[row] == -2:
+                if slot_r[row] == SLOT_SYNONYM:
                     # synonym member row: keep raw tf + norm so the
                     # group saturates ONCE on the summed tf
                     syn.setdefault(leaf_r[row], []).append(
@@ -3012,7 +2863,7 @@ def _make_tree_batch_kernel(
                             idf_r[row],
                         )
                     )
-                elif slot_r[row] == -3:
+                elif slot_r[row] == SLOT_SPAN_FIRST:
                     # span-first member row: positions + norms + the
                     # group's blended idf; members union after the
                     # loop so the restricted tf saturates ONCE
@@ -3025,7 +2876,7 @@ def _make_tree_batch_kernel(
                             idf_r[row],
                         )
                     )
-                elif slot_r[row] == -4:
+                elif slot_r[row] == SLOT_SPAN_NOT_INC:
                     # span-not include member row: positions + norms
                     # + blended idf, unioned and resolved against the
                     # exclude union after the loop
@@ -3038,7 +2889,7 @@ def _make_tree_batch_kernel(
                             idf_r[row],
                         )
                     )
-                elif slot_r[row] == -5:
+                elif slot_r[row] == SLOT_SPAN_NOT_EXC:
                     snot_exc.setdefault(leaf_r[row], []).append(
                         (
                             docs,
@@ -3046,7 +2897,7 @@ def _make_tree_batch_kernel(
                             dec["pos_all"][dec["p_cum"][es] : dec["p_cum"][ee]],
                         )
                     )
-                elif slot_r[row] < 0:
+                elif slot_r[row] == SLOT_TERM:
                     simple.setdefault(leaf_r[row], []).append((docs, contrib))
                 else:
                     pc = dec["pcounts"][es:ee]

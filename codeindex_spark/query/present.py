@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from codeindex_spark.query import ast
-from codeindex_spark.query.planner import SearchEngine
+from codeindex_spark.query.planner import SearchEngine, _as_root
 from codeindex_spark.tokenizer import TOKEN_RE
 
 MAX_CONTENT_HIGHLIGHT_LENGTH = 3_000_000
@@ -42,12 +42,15 @@ def matched_content_terms(
 ) -> tuple[set[str], bool]:
     """Concrete content-field terms the query matches (wildcard/fuzzy
     expanded against the dictionary). Returns (terms, cased?)."""
-    root = (
-        ast.parse_query(query, case_sensitive) if isinstance(query, str) else query
-    )
-    rows, _ = engine._plan_rows(root)
+    planned = engine._plan({"": _as_root(query, case_sensitive)})
     fld = "content_cs" if case_sensitive else "content"
-    return {r["term"] for r in rows if r["field"] == fld}, case_sensitive
+    terms = {
+        r["term"]
+        for _, rows in planned.values()
+        for r in rows
+        if r["field"] == fld
+    }
+    return terms, case_sensitive
 
 
 def _token_match(token: str, terms: set[str], cased: bool) -> bool:

@@ -130,6 +130,31 @@ def test_warm_search_plans_without_jobs(spark, engine):
     assert _jobs_in(spark, lambda: engine.search(q, k=5, with_docs=True)) == []
 
 
+def test_warm_term_count_launches_no_job(spark, engine):
+    """A lone Term's count answers from the cached dictionary df:
+    once warm, it launches no Spark job."""
+    q = ast.Term("get", "content")
+    n = engine.count(q)
+    assert n > 0
+    jobs = _jobs_in(spark, lambda: engine.count(q))
+    assert jobs == []
+    assert engine.count(q) == n
+
+
+def test_phrase_wildcard_slot_reuses_expansion(spark, engine):
+    """A wildcard phrase slot expands through the expansion cache:
+    the repeated phrase reuses the entry and plans without a job."""
+    q = ast.Phrase(("get", "stri*"), "content")
+    first = engine.search(q, k=5).collect()
+    key = ("content", "w", "stri*")
+    entry = engine._expand_cache[key]
+    assert entry
+    jobs = _jobs_in(spark, lambda: engine.search(q, k=5))
+    assert jobs == []
+    assert engine._expand_cache[key] is entry
+    assert engine.search(q, k=5).collect() == first
+
+
 def test_facets_single_group_shuffle(engine):
     plan = _plan(engine.facet_counts("get"))
     # ONE aggregate pair over the unpivoted rows: partial+final =

@@ -80,6 +80,15 @@ def test_search_many_equals_per_query(engine, oracle):
         "wild": "stri*",
         "fz": "strng~2",
         "ph": ast.parse_phrase_query("add documents"),
+        # blended and span leaves: the batch plan step must resolve
+        # every member term a per-query plan resolves
+        "syn": ast.Synonyms(("get", "string", "return")),
+        "sor": ast.SpanOr(("add", "remove", "writer")),
+        "sfirst": ast.SpanFirst(ast.SpanOr(("get", "index")), end=3),
+        "snot": ast.SpanNot("get", "string", pre=2, post=2),
+        "snear": ast.SpanNear(
+            [ast.SpanOr(("add", "remove")), "documents"], slop=1
+        ),
     }
     got = engine.search_many(batch, k=K).collect()
     by_q: dict[str, list] = {}
@@ -89,6 +98,7 @@ def test_search_many_equals_per_query(engine, oracle):
         solo = [
             (r["doc_id"], r["score"]) for r in engine.search(q, k=K).collect()
         ]
+        assert solo, name  # every entry must exercise its leaf kind
         assert by_q.get(name, []) == solo, name
 
 
@@ -328,12 +338,9 @@ def test_dict_cache_negative_hit(engine):
     assert engine.search(q, k=5).count() == 0  # negative hit, still empty
 
 
-def test_dict_cache_invalidate_and_disable(spark, engine):
+def test_dict_cache_invalidate(engine):
     engine.invalidate_caches()
     assert engine._dict_cache == {} and engine._expand_cache == {}
-    eng2 = SearchEngine(engine.reader, dict_cache=False)
-    eng2.search(ast.Term("get", "content"), k=5).collect()
-    assert eng2._dict_cache == {}
 
 
 def test_expand_cache_wildcard(engine, oracle):
