@@ -437,7 +437,8 @@ def required_literals(pattern: str) -> list[str]:
 # queries skip the dictionary job entirely (one Spark job per search
 # instead of two). Entries are tiny ((str, str) -> int); 256k entries
 # is a few tens of MB. An engine is constructed per index state
-# (readers are immutable views), so staleness is structural, not timed.
+# (readers are point-in-time views; a stacked MultiReader raises once
+# its index changes), so staleness is structural, not timed.
 DICT_CACHE_CAP = 262_144
 EXPAND_CACHE_CAP = 512
 _MISS = object()  # sentinel: distinguishes "not cached" from "df is None"

@@ -33,6 +33,7 @@ ST-operator mapping:
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 from typing import Iterator
@@ -264,6 +265,55 @@ def _exact_live_sums(seg_stats, dead_row: dict, needed: tuple) -> dict | None:
     return sums
 
 
+def _segs_as_of(segs: list[dict], as_of: int | None) -> list[dict]:
+    """The segments visible after the ``as_of``-th apply."""
+    if as_of is None:
+        return segs
+    if as_of < 0:
+        raise ValueError("as_of must be >= 0")
+    # legacy records without an epoch: position == apply ordinal
+    return [s for i, s in enumerate(segs) if s.get("epoch", i) <= as_of]
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def _read_segments(spark: SparkSession, segs: list[dict], table: str) -> DataFrame:
+    """One segment table (an ``IndexPaths`` name: ``docs``,
+    ``term_dict``, ...) unioned across ``segs``."""
+    return _union(
+        [spark.read.parquet(getattr(IndexPaths(s["dir"]), table)) for s in segs]
+    )
+
+
+def _live(docs: DataFrame, tomb: DataFrame | None) -> DataFrame:
+    """Live docs: ``docs`` minus the tombstoned doc_keys."""
+    return docs if tomb is None else docs.join(tomb, "doc_key", "left_anti")
+
+
+def _merged_term_dict(spark: SparkSession, segs: list[dict]) -> DataFrame:
+    return (
+        _read_segments(spark, segs, "term_dict")
+        .groupBy("field", "term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    )
+
+
+def _segment_stats(segs: list[dict]) -> list[pd.DataFrame]:
+    return [pd.read_parquet(IndexPaths(s["dir"]).stats) for s in segs]
+
+
+def _merged_stats(seg_stats: list[pd.DataFrame]) -> pd.DataFrame:
+    g = (
+        pd.concat(seg_stats)
+        .groupby("field", as_index=False)
+        .agg(n_docs=("n_docs", "sum"), total_dl=("total_dl", "sum"))
+    )
+    g["avgdl"] = g["total_dl"] / g["n_docs"]
+    return g
+
+
 class IncrementalIndex:
     """Segment-stacked incremental index with tombstones.
 
@@ -274,7 +324,8 @@ class IncrementalIndex:
                                epoch-tagged (the apply ordinal)
         merged/term_dict.parquet, merged/stats.parquet
         _segments.json       — ordered segment list + doc-space ends
-                               + epochs + the n_applies counter
+                               + epochs + the n_applies counter + the
+                               generation (bumped when history restarts)
 
     Epochs give Iceberg-style snapshot time travel: ``reader(as_of=k)``
     serves queries against the exact state after the k-th apply
@@ -329,42 +380,54 @@ class IncrementalIndex:
     def _removed_words_dir(self) -> str:
         return os.path.join(self.root, "removed_words.parquet")
 
-    def segments(self) -> list[dict]:
+    def _state(self) -> dict:
+        """The parsed ``_segments.json``: ``segments``, ``n_applies``
+        and ``generation`` (bumped each time history restarts, so a
+        reader can tell a rebuilt base from the one it opened)."""
         if not os.path.exists(self._seg_file):
-            return []
-        return json.load(open(self._seg_file))["segments"]
+            return {"segments": [], "n_applies": 0, "generation": 0}
+        meta = json.load(open(self._seg_file))
+        # older files lack the counters: each apply added one segment
+        meta.setdefault("n_applies", max(0, len(meta["segments"]) - 1))
+        meta.setdefault("generation", 0)
+        return meta
+
+    def segments(self) -> list[dict]:
+        return self._state()["segments"]
 
     def n_applies(self) -> int:
         """Snapshot epoch counter: 0 after build_base, +1 per
         apply_changes/apply_snapshot. Older _segments.json without
         the key falls back to segment count (each apply added one)."""
-        if not os.path.exists(self._seg_file):
-            return 0
-        meta = json.load(open(self._seg_file))
-        if "n_applies" in meta:
-            return int(meta["n_applies"])
-        return max(0, len(meta["segments"]) - 1)
+        return int(self._state()["n_applies"])
 
     def _write_segments(
-        self, segs: list[dict], n_applies: int | None = None
+        self, segs: list[dict], n_applies: int, generation: int
     ) -> None:
-        if n_applies is None:
-            n_applies = self.n_applies()
         tmp = self._seg_file + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"segments": segs, "n_applies": n_applies}, f, indent=1)
+            json.dump(
+                {
+                    "segments": segs,
+                    "n_applies": n_applies,
+                    "generation": generation,
+                },
+                f,
+                indent=1,
+            )
         os.replace(tmp, self._seg_file)
 
-    def _segs_as_of(self, as_of: int | None) -> list[dict]:
-        segs = self.segments()
-        if as_of is None:
-            return segs
-        if as_of < 0:
-            raise ValueError("as_of must be >= 0")
-        # legacy records without an epoch: position == apply ordinal
-        return [
-            s for i, s in enumerate(segs) if s.get("epoch", i) <= as_of
-        ]
+    def _restart_history(self, name: str, seg_dir: str, end_doc: int) -> None:
+        """Make ``seg_dir`` the only segment at epoch 0 in a new
+        generation (build_base, compact, merge_compact): history
+        expires and readers opened before fail instead of reading
+        replaced files."""
+        self._write_segments(
+            [{"name": name, "dir": seg_dir, "end_doc": end_doc, "epoch": 0}],
+            n_applies=0,
+            generation=self._state()["generation"] + 1,
+        )
+        self._merge_metadata()
 
     # ---------- build ----------
 
@@ -373,12 +436,7 @@ class IncrementalIndex:
         IndexBuilder(self.spark, base_dir, self.params, self.n_groups).build(
             docs_raw, resume=False
         )
-        end_doc = self._segment_end(base_dir)
-        self._write_segments(
-            [{"name": "base", "dir": base_dir, "end_doc": end_doc, "epoch": 0}],
-            n_applies=0,
-        )
-        self._merge_metadata()
+        self._restart_history("base", base_dir, self._segment_end(base_dir))
 
     def _segment_end(self, seg_dir: str) -> int:
         offsets = pd.read_parquet(IndexPaths(seg_dir).offsets)
@@ -396,22 +454,31 @@ class IncrementalIndex:
         rec = reconcile(live, snapshot).cache()
         # doc identity is (repo, path, commit): an update MUST carry a
         # new commit, else its doc_key collides with the tombstoned old
-        # version and the new row would be filtered out too
-        stale = (
-            rec.filter(F.col("action") == "update")
-            .withColumn(
-                "new_doc_key",
-                F.sha2(
-                    F.concat_ws(
-                        "\x1f", F.col("repo"), F.col("path"), F.col("commit")
-                    ),
-                    256,
-                ),
-            )
-            .filter(F.col("new_doc_key") == F.col("old_doc_key"))
-            .count()
+        # version and the new row would be filtered out too. One
+        # aggregate job returns the per-action counts and the stale
+        # updates together.
+        new_doc_key = F.sha2(
+            F.concat_ws("\x1f", F.col("repo"), F.col("path"), F.col("commit")),
+            256,
         )
+        rows = (
+            rec.groupBy("action")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(
+                    F.when(
+                        (F.col("action") == "update")
+                        & (new_doc_key == F.col("old_doc_key")),
+                        True,
+                    )
+                ).alias("stale"),
+            )
+            .collect()
+        )
+        counts = {r["action"]: r["n"] for r in rows}
+        stale = sum(r["stale"] for r in rows)
         if stale:
+            rec.unpersist()
             raise ValueError(
                 f"{stale} updated rows kept their commit unchanged; "
                 "updates must carry a new commit (doc identity is "
@@ -423,10 +490,6 @@ class IncrementalIndex:
         dead_keys = rec.filter(F.col("action").isin("update", "delete")).select(
             F.col("old_doc_key").alias("doc_key")
         )
-        counts = {
-            r["action"]: r["count"]
-            for r in rec.groupBy("action").count().collect()
-        }
         self.apply_changes(changed, dead_keys)
         rec.unpersist()
         return counts
@@ -434,10 +497,11 @@ class IncrementalIndex:
     def apply_changes(
         self, new_docs: DataFrame, dead_doc_keys: DataFrame | None
     ) -> None:
-        segs = self.segments()
+        state = self._state()
+        segs = state["segments"]
         if not segs:
             raise RuntimeError("build_base first")
-        epoch = self.n_applies() + 1
+        epoch = state["n_applies"] + 1
         n_new = new_docs.count()
         if dead_doc_keys is not None:
             dead = dead_doc_keys.distinct()
@@ -478,7 +542,9 @@ class IncrementalIndex:
                     "epoch": epoch,
                 }
             )
-        self._write_segments(segs, n_applies=epoch)
+        self._write_segments(
+            segs, n_applies=epoch, generation=state["generation"]
+        )
         self._merge_metadata()
 
     def _record_removed_words(
@@ -511,53 +577,42 @@ class IncrementalIndex:
         merged = os.path.join(self.root, "merged")
         os.makedirs(merged, exist_ok=True)
         segs = self.segments()
-        tds = [
-            self.spark.read.parquet(IndexPaths(s["dir"]).term_dict)
-            for s in segs
-        ]
-        td = tds[0]
-        for t in tds[1:]:
-            td = td.unionByName(t)
-        td = td.groupBy("field", "term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
+        _merged_term_dict(self.spark, segs).write.mode("overwrite").partitionBy(
+            "field"
+        ).parquet(os.path.join(merged, "term_dict.parquet"))
+        _merged_stats(_segment_stats(segs)).to_parquet(
+            os.path.join(merged, "stats.parquet"), index=False
         )
-        td.write.mode("overwrite").partitionBy("field").parquet(
-            os.path.join(merged, "term_dict.parquet")
-        )
-        stats = pd.concat(
-            [pd.read_parquet(IndexPaths(s["dir"]).stats) for s in segs]
-        )
-        g = stats.groupby("field", as_index=False).agg(
-            n_docs=("n_docs", "sum"), total_dl=("total_dl", "sum")
-        )
-        g["avgdl"] = g["total_dl"] / g["n_docs"]
-        g.to_parquet(os.path.join(merged, "stats.parquet"), index=False)
 
     # ---------- read ----------
 
+    def _tombstones(self, as_of: int | None) -> DataFrame | None:
+        """Tombstoned doc_keys visible at ``as_of`` (None: there are
+        no tombstones)."""
+        if not os.path.exists(self._tomb_dir):
+            return None
+        tomb = self.spark.read.parquet(self._tomb_dir)
+        if as_of is not None and "epoch" in tomb.columns:
+            tomb = tomb.filter(F.col("epoch") <= as_of)
+        return tomb
+
     def live_docs(self, as_of: int | None = None) -> DataFrame:
-        docs = self.all_docs(as_of)
-        if os.path.exists(self._tomb_dir):
-            tomb = self.spark.read.parquet(self._tomb_dir)
-            if as_of is not None and "epoch" in tomb.columns:
-                tomb = tomb.filter(F.col("epoch") <= as_of)
-            docs = docs.join(tomb, "doc_key", "left_anti")
-        return docs
+        return _live(self.all_docs(as_of), self._tombstones(as_of))
 
     def all_docs(self, as_of: int | None = None) -> DataFrame:
-        segs = self._segs_as_of(as_of)
-        dfs = [self.spark.read.parquet(IndexPaths(s["dir"]).docs) for s in segs]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _read_segments(
+            self.spark, _segs_as_of(self.segments(), as_of), "docs"
+        )
 
     def reader(self, as_of: int | None = None) -> "MultiReader":
-        """``as_of=k`` reads the index exactly as it stood after the
-        k-th apply (0 = just the base build) — Iceberg-style snapshot
-        time travel over the segment/tombstone log. compact() and
-        merge_compact() expire history: afterwards only the current
-        state (epoch 0 again) is addressable."""
+        """A point-in-time view: ``as_of=k`` reads the index exactly as
+        it stood after the k-th apply (0 = just the base build) —
+        Iceberg-style snapshot time travel over the segment/tombstone
+        log; ``None`` reads the latest state. The reader holds the
+        frames it opened: reopen it after apply_*()/compact()/
+        merge_compact() (a stale reader raises ValueError).
+        compact() and merge_compact() expire history: afterwards only
+        the current state (epoch 0 again) is addressable."""
         return MultiReader(self, as_of)
 
     # ---------- compaction ----------
@@ -582,19 +637,7 @@ class IncrementalIndex:
         shutil.rmtree(os.path.join(self.root, "deltas"), ignore_errors=True)
         shutil.rmtree(self._tomb_dir, ignore_errors=True)
         shutil.rmtree(self._removed_words_dir, ignore_errors=True)
-        self._write_segments(
-            [
-                {
-                    "name": "base",
-                    "dir": old_base,
-                    "end_doc": self._segment_end(old_base),
-                    "epoch": 0,
-                }
-            ],
-            n_applies=0,  # history expired — snapshots restart at 0
-        )
-        self._merge_metadata()
-
+        self._restart_history("base", old_base, self._segment_end(old_base))
 
     def merge_compact(self) -> None:
         """Postings-level compaction: drop tombstoned docs from the
@@ -674,13 +717,7 @@ class IncrementalIndex:
         # surprise (e.g. a pre-total_dl segment).
         stats = None
         try:
-            seg_stats = pd.concat(
-                [
-                    pd.read_parquet(IndexPaths(s["dir"]).stats)
-                    for s in segs
-                ],
-                ignore_index=True,
-            )
+            seg_stats = pd.concat(_segment_stats(segs), ignore_index=True)
             sums = _exact_live_sums(seg_stats, _sum_agg(dead_docs), needed)
             if sums is not None:
                 stats = _stats_from_sums(sums, tuple(self.params.fields))
@@ -891,39 +928,84 @@ class IncrementalIndex:
                 shutil.rmtree(s["dir"], ignore_errors=True)
         shutil.rmtree(self._tomb_dir, ignore_errors=True)
         shutil.rmtree(self._removed_words_dir, ignore_errors=True)
-        self._write_segments(
-            [
-                {
-                    "name": "merged",
-                    "dir": merged_dir,
-                    "end_doc": end_doc,
-                    "epoch": 0,
-                }
-            ],
-            n_applies=0,  # history expired — snapshots restart at 0
-        )
-        self._merge_metadata()
+        self._restart_history("merged", merged_dir, end_doc)
+
+
+def _held(open_frame):
+    """A MultiReader frame: opened on first access, then held; every
+    access first checks that the reader is still current."""
+    name = open_frame.__name__
+
+    @functools.wraps(open_frame)
+    def get(self):
+        self._check_current()
+        if name not in self._frames:
+            self._frames[name] = open_frame(self)
+        return self._frames[name]
+
+    return property(get)
 
 
 class MultiReader:
-    """IndexReader-compatible view over stacked segments: unioned
-    postings/docs, merged dictionary/stats, tombstone-aware liveness.
-    Drop-in for SearchEngine."""
+    """Query-side handle over stacked segments: a point-in-time view
+    of an IncrementalIndex, IndexReader-compatible (unioned
+    postings/docs, merged dictionary/stats, tombstone-aware liveness)
+    and a drop-in for SearchEngine.
+
+    The segment list is pinned at open; each table frame (``docs``,
+    ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
+    first access and then held, so a query does not re-run Parquet
+    schema inference and file listing per access. The held frames
+    keep the file listing they were opened with: reopen the reader
+    after apply_*(), compact() or merge_compact(). Every access checks
+    ``_segments.json`` (no Spark job): a latest-view reader raises
+    ValueError once the index has changed; an ``as_of`` reader keeps
+    working after later applies and raises once compaction has
+    expired its epoch."""
 
     def __init__(self, inc: IncrementalIndex, as_of: int | None = None):
         self.inc = inc
         self.spark = inc.spark
         self.as_of = as_of
-        base = inc.segments()[0]["dir"]
-        self._base_reader = IndexReader(inc.spark, base)
-        self.params = self._base_reader.params
-        self._stats: pd.DataFrame | None = None
+        state = inc._state()
+        self._segs = _segs_as_of(state["segments"], as_of)
+        self._opened = self._view(state)
+        self._frames: dict = {}
+        self.params = IndexReader(inc.spark, self._segs[0]["dir"]).params
 
-    @property
+    def _view(self, state: dict) -> tuple[int, int]:
+        """(generation, epoch this reader sees) of a _segments.json
+        state."""
+        n = int(state["n_applies"])
+        epoch = n if self.as_of is None else min(n, self.as_of)
+        return state["generation"], epoch
+
+    def _check_current(self) -> None:
+        now = self._view(self.inc._state())
+        if now != self._opened:
+            (g0, e0), (g1, e1) = self._opened, now
+            raise ValueError(
+                f"stale reader: it was opened at epoch {e0} (generation "
+                f"{g0}) of {self.inc.root}, which is now at epoch {e1} "
+                f"(generation {g1}); reopen it with inc.reader()"
+            )
+
+    @functools.cached_property
+    def _tombstones(self) -> DataFrame | None:
+        return self.inc._tombstones(self.as_of)
+
+    @functools.cached_property
+    def _seg_stats(self) -> list[pd.DataFrame]:
+        return _segment_stats(self._segs)
+
+    @_held
     def docs(self) -> DataFrame:
-        return self.inc.live_docs(self.as_of)
+        """The live docs: the segments' docs minus the tombstones."""
+        return _live(
+            _read_segments(self.spark, self._segs, "docs"), self._tombstones
+        )
 
-    @property
+    @_held
     def postings(self) -> DataFrame:
         """Unioned postings with a per-row `_ub_scale` column: block-max
         tfnorms were encoded with each SEGMENT's avgdl, but queries
@@ -931,13 +1013,11 @@ class MultiReader:
         a valid query-time upper bound is the stored block-max times
         max(1, avgdl_merged / avgdl_segment) — without it, WAND could
         prune a block whose docs now out-score their build-time bound."""
-        segs = self.inc._segs_as_of(self.as_of)
         merged = {
             r.field: float(r.avgdl) for r in self.stats.itertuples()
         }
-        dfs = []
-        for s in segs:
-            seg_stats = pd.read_parquet(IndexPaths(s["dir"]).stats)
+        frames = []
+        for s, seg_stats in zip(self._segs, self._seg_stats):
             fac = {}
             for r in seg_stats.itertuples():
                 seg_avgdl = float(r.avgdl)
@@ -953,16 +1033,13 @@ class MultiReader:
                     for x in (F.lit(f_), F.lit(v))
                 ]
             )
-            dfs.append(
+            frames.append(
                 self.spark.read.parquet(IndexPaths(s["dir"]).postings)
                 .withColumn("_ub_scale", mapping[F.col("field")])
             )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union(frames)
 
-    @property
+    @_held
     def term_dict(self) -> DataFrame:
         if self.as_of is None:
             return self.spark.read.parquet(
@@ -971,18 +1048,9 @@ class MultiReader:
         # snapshot read: merge the prefix's dictionaries on the fly
         # (the persisted merged/ artifacts only describe the latest
         # epoch); the union is |prefix| vocabulary-sized frames
-        tds = [
-            self.spark.read.parquet(IndexPaths(s["dir"]).term_dict)
-            for s in self.inc._segs_as_of(self.as_of)
-        ]
-        td = tds[0]
-        for t in tds[1:]:
-            td = td.unionByName(t)
-        return td.groupBy("field", "term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
-        )
+        return _merged_term_dict(self.spark, self._segs)
 
-    @property
+    @_held
     def hints(self) -> DataFrame:
         """Hint words with at least one LIVE doc: merged-dictionary df
         minus the removed-doc counts recorded at tombstone time, so
@@ -1010,26 +1078,9 @@ class MultiReader:
             return td.join(rw, "word", "left").fillna({"removed": 0})
         return td.withColumn("removed", F.lit(0))
 
-    @property
+    @_held
     def stats(self) -> pd.DataFrame:
-        if self._stats is None:
-            if self.as_of is None:
-                self._stats = pd.read_parquet(
-                    os.path.join(self.inc.root, "merged", "stats.parquet")
-                )
-            else:
-                st = pd.concat(
-                    [
-                        pd.read_parquet(IndexPaths(s["dir"]).stats)
-                        for s in self.inc._segs_as_of(self.as_of)
-                    ]
-                )
-                g = st.groupby("field", as_index=False).agg(
-                    n_docs=("n_docs", "sum"), total_dl=("total_dl", "sum")
-                )
-                g["avgdl"] = g["total_dl"] / g["n_docs"]
-                self._stats = g
-        return self._stats
+        return _merged_stats(self._seg_stats)
 
     def field_stats(self, field: str) -> tuple[int, float]:
         row = self.stats[self.stats["field"] == field]
@@ -1038,9 +1089,10 @@ class MultiReader:
         return int(row["n_docs"].iloc[0]), float(row["avgdl"].iloc[0])
 
     def live_doc_ids(self) -> DataFrame | None:
-        if os.path.exists(self.inc._tomb_dir):
-            return self.inc.live_docs(self.as_of).select("doc_id")
-        return None
+        """doc_id of the held live docs; None when there are no
+        tombstones (every posting is live)."""
+        docs = self.docs
+        return None if self._tombstones is None else docs.select("doc_id")
 
 
 # ------------------------------------------------------------- ST1/ST2

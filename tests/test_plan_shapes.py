@@ -9,11 +9,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from codeindex_spark.corpus import CorpusSpec, spark_documents
+from codeindex_spark.corpus import CorpusSpec, generate_documents, spark_documents
 from codeindex_spark.index.build import IndexParams
 from codeindex_spark.index.segments import IndexBuilder, IndexReader
 from codeindex_spark.query import ast
 from codeindex_spark.query.planner import SearchEngine
+from codeindex_spark.streaming.maintain import IncrementalIndex
 
 PARAMS = IndexParams(num_buckets=16, block_size=32)
 
@@ -128,6 +129,43 @@ def test_warm_search_plans_without_jobs(spark, engine):
     q = ast.Term("get", "content")
     engine.search(q, k=5, with_docs=True).collect()
     assert _jobs_in(spark, lambda: engine.search(q, k=5, with_docs=True)) == []
+
+
+@pytest.fixture(scope="module")
+def stacked_engine(spark, tmp_path_factory):
+    """SearchEngine over an IncrementalIndex with one applied snapshot
+    (an update and a delete, so the reader carries tombstones)."""
+    v1 = generate_documents(CorpusSpec(n_docs=60))
+    v2 = v1.drop(index=5).reset_index(drop=True)
+    v2.loc[3, "content"] = "get replacement content here"
+    v2.loc[3, "commit"] = "cplanshapes01"
+    inc = IncrementalIndex(
+        spark, str(tmp_path_factory.mktemp("planinc")), PARAMS, n_groups=1
+    )
+    inc.build_base(spark.createDataFrame(v1))
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    return SearchEngine(inc.reader())
+
+
+def test_stacked_reader_opens_each_frame_once(stacked_engine):
+    rdr = stacked_engine.reader
+    assert rdr.live_doc_ids() is not None  # tombstones present
+    for name in ("docs", "postings", "term_dict"):
+        assert getattr(rdr, name) is getattr(rdr, name), name
+
+
+def test_stacked_warm_search_plans_without_jobs(spark, stacked_engine):
+    """The stacked reader holds its frames too: once warm, planning a
+    with-docs search of a dictionary-cached term launches no Spark
+    job (no per-access re-read of segment docs, postings, tombstones
+    or the merged dictionary)."""
+    q = ast.Term("get", "content")
+    first = stacked_engine.search(q, k=5, with_docs=True).collect()
+    assert first
+    jobs = _jobs_in(
+        spark, lambda: stacked_engine.search(q, k=5, with_docs=True)
+    )
+    assert jobs == []
 
 
 def test_warm_term_count_launches_no_job(spark, engine):

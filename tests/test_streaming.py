@@ -263,6 +263,19 @@ def inc_index(spark, tmp_path_factory, versions):
     return inc
 
 
+def test_update_without_new_commit_raises(spark, tmp_path):
+    """An update keeps its doc_key when its commit is unchanged, so
+    the tombstone would also hide the new version: refused."""
+    v1 = generate_documents(CorpusSpec(n_docs=5))
+    inc = IncrementalIndex(spark, str(tmp_path / "stale_commit"), PARAMS)
+    inc.build_base(spark.createDataFrame(v1))
+    v2 = v1.copy()
+    v2.loc[1, "content"] = "changed content, same commit"
+    with pytest.raises(ValueError, match="updates must carry a new commit"):
+        inc.apply_snapshot(spark.createDataFrame(v2))
+    assert inc.n_applies() == 0
+
+
 def test_incremental_search_semantics(spark, inc_index, versions):
     _, _, deleted_path = versions
     eng = SearchEngine(inc_index.reader())

@@ -133,3 +133,52 @@ def test_count_respects_tombstones(tt):
         eng = SearchEngine(inc.reader(as_of=epoch))
         n = eng.count(Term(QUERY))
         assert n == eng.search(QUERY, k=10_000).count()
+
+
+STALE_QUERY = "get"
+
+
+@pytest.fixture
+def one_apply(spark, tmp_path):
+    """A fresh index after one delete-only apply (epoch 1), plus the
+    snapshot it was applied from."""
+    v1 = generate_documents(CorpusSpec(n_docs=20))
+    inc = IncrementalIndex(spark, str(tmp_path / "stale"), PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    v2 = v1.drop(index=3).reset_index(drop=True)
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    return inc, v2
+
+
+def test_latest_reader_after_apply_raises(one_apply, spark):
+    """A latest-view reader is a point-in-time view: reused after an
+    apply it fails loudly instead of mixing old dictionary stats with
+    new postings."""
+    inc, v2 = one_apply
+    rdr = inc.reader()
+    eng = SearchEngine(rdr)
+    assert eng.search(STALE_QUERY, k=5).count() > 0
+    inc.apply_snapshot(spark.createDataFrame(v2.drop(index=0)))
+    with pytest.raises(ValueError, match=r"epoch 1.*epoch 2.*inc\.reader\(\)"):
+        eng.search(STALE_QUERY, k=5)
+    with pytest.raises(ValueError, match="reopen"):
+        rdr.docs
+    assert SearchEngine(inc.reader()).search(STALE_QUERY, k=5).count() > 0
+
+
+def test_as_of_reader_survives_later_apply(one_apply, spark):
+    inc, v2 = one_apply
+    eng = SearchEngine(inc.reader(as_of=1))
+    before = _results(eng, STALE_QUERY)
+    inc.apply_snapshot(spark.createDataFrame(v2.drop(index=0)))
+    assert _results(eng, STALE_QUERY) == before
+    assert _results(SearchEngine(inc.reader(as_of=1)), STALE_QUERY) == before
+
+
+def test_as_of_reader_after_compact_raises(one_apply):
+    inc, _v2 = one_apply
+    rdr = inc.reader(as_of=1)
+    assert _results(SearchEngine(rdr), STALE_QUERY)
+    inc.compact()
+    with pytest.raises(ValueError, match="generation"):
+        SearchEngine(rdr).search(STALE_QUERY, k=5)
