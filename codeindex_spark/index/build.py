@@ -515,16 +515,20 @@ def compute_plan(
 
 
 def build_postings(
-    tokens: DataFrame, stats: pd.DataFrame, params: IndexParams
+    tokens: DataFrame,
+    stats: pd.DataFrame,
+    params: IndexParams,
+    num_partitions: int,
 ) -> DataFrame:
     """doc-term rows -> compressed posting blocks.
 
-    Shuffle on (field, term, block_id): bounded groups (<= block_size
-    docs) — hot terms fan out across blocks instead of hot-keying one
-    reducer (structural skew elimination). Encoding runs as ONE
-    vectorized mapInPandas pass over the partition-sorted stream with
-    carry across Arrow batch boundaries — no per-group Python call,
-    no grouped-map overhead (encoding.encode_blocks_batch).
+    Shuffle on (field, term, block_id) into ``num_partitions``
+    partitions (sized by the caller from its input): bounded groups
+    (<= block_size docs) — hot terms fan out across blocks instead of
+    hot-keying one reducer (structural skew elimination). Encoding
+    runs as ONE vectorized mapInPandas pass over the partition-sorted
+    stream with carry across Arrow batch boundaries — no per-group
+    Python call, no grouped-map overhead (encoding.encode_blocks_batch).
     """
     avgdl_map = {str(k): float(v) for k, v in zip(stats["field"], stats["avgdl"])}
     k1, b, bsz, codec = params.k1, params.b, params.block_size, params.codec
@@ -555,7 +559,9 @@ def build_postings(
     with_block = tokens.withColumn(
         "block_id", (F.col("doc_id") / F.lit(params.block_size)).cast("long")
     )
-    shuffled = with_block.repartition(*[F.col(c) for c in key_cols])
+    shuffled = with_block.repartition(
+        num_partitions, *[F.col(c) for c in key_cols]
+    )
     return shuffled.sortWithinPartitions(*key_cols, "doc_id").mapInPandas(
         encode_stream, schema=POSTING_SCHEMA
     )

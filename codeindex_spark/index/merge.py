@@ -58,6 +58,7 @@ from codeindex_spark.index.segments import (
     IndexPaths,
     IndexReader,
     _atomic_write_json,
+    read_table,
 )
 
 __all__ = ["merge_indexes"]
@@ -223,7 +224,7 @@ def merge_indexes(
     ).sortWithinPartitions("term").write.mode("overwrite").partitionBy(
         "field"
     ).parquet(out.term_dict)
-    hints = hints_from_term_dict(spark.read.parquet(out.term_dict))
+    hints = hints_from_term_dict(read_table(spark, "term_dict", out.term_dict))
     hints.coalesce(4).write.mode("overwrite").parquet(out.hints)
 
     # ---- params + manifest (merge lineage: sources, offsets, spans)

@@ -26,6 +26,28 @@ Bucket groups are the resumability/lineage granularity required by
 BASELINE.json north_rule ("resumable from checkpoint with
 per-partition lineage + metrics"). At 10^12-file scale each group is
 an independent Spark job over ~1/G of the corpus.
+
+Step sizes come from the plan. One rule (``task_count``) gives every
+split/partition count of a build: the tokenize input split, the
+(field, term, block_id) posting shuffle, the posting and dictionary
+range exchanges and the hints coalesce. It asks for one task per
+``TOKENS_PER_TASK`` tokens of the step's input, capped at the fixed
+count each step used before (so a large build keeps that shape). The
+token count is read from the plan's artifacts — ``stats.parquet``
+``total_dl``, scaled by the group's share of the ``offsets.parquet``
+``n_docs`` — so a resumed build derives the same counts. A small
+input (an incremental delta) gets 1: a one-partition range exchange
+takes no sample, and the encoded blocks are cached only when a
+sampler would otherwise re-run the encode.
+
+Engine tables are opened with declared schemas (``TABLE_SCHEMAS``,
+``read_table``): ``docs``, ``postings``, ``term_dict``, ``hints`` and
+the incremental index's ``tombstones`` and ``removed_words``. A read
+then lists files but runs no footer-inference job. The declared
+schema must match what the writers produce, partition columns last in
+directory order: a column added to a table's writer must be added to
+its schema too, or it reads as NULL
+(``tests/test_streaming.py::test_declared_schemas_match_written_tables``).
 """
 
 from __future__ import annotations
@@ -40,9 +62,11 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from codeindex_spark.index import docids
 from codeindex_spark.index.build import (
+    POSTING_SCHEMA,
     IndexParams,
     build_postings,
     compute_plan,
@@ -52,6 +76,7 @@ from codeindex_spark.index.build import (
     term_dict_from_postings,
     token_rows,
 )
+from codeindex_spark.util import ensure_parallelism
 
 DOC_COLUMNS = [
     "doc_id",
@@ -68,7 +93,62 @@ DOC_COLUMNS = [
 ]
 
 
-from codeindex_spark.util import ensure_parallelism as _ensure_parallelism
+def _schema(cols) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in cols])
+
+
+_STR, _INT, _LONG = T.StringType(), T.IntegerType(), T.LongType()
+
+# Declared schema of every engine table, as Spark infers it from the
+# written files: all columns nullable, partition columns last in
+# directory order (docs/group=G, postings/group=G/field=F,
+# term_dict.parquet/field=F).
+TABLE_SCHEMAS = {
+    "docs": _schema(
+        [("doc_id", _LONG), ("bucket", _INT)]
+        + [(c, _STR) for c in DOC_COLUMNS[2:]]
+        + [("group", _INT)]
+    ),
+    "postings": _schema(
+        [(f.name, f.dataType) for f in POSTING_SCHEMA.fields if f.name != "field"]
+        + [("group", _INT), ("field", _STR)]
+    ),
+    "term_dict": _schema(
+        [("term", _STR), ("df", _LONG), ("cf", _LONG), ("field", _STR)]
+    ),
+    "hints": _schema([("word", _STR), ("word_lower", _STR)]),
+    # incremental index (streaming/maintain.py); files written before
+    # epochs existed lack the column, which then reads as NULL
+    "tombstones": _schema([("doc_key", _STR), ("epoch", _INT)]),
+    "removed_words": _schema(
+        [("word", _STR), ("removed", _LONG), ("epoch", _INT)]
+    ),
+}
+
+
+def read_table(spark: SparkSession, table: str, path: str) -> DataFrame:
+    """Open engine table ``table`` (a ``TABLE_SCHEMAS`` key) at
+    ``path`` with its declared schema: no footer-inference job
+    (~15-30 ms warm instead of ~95-145 ms plus a one-task job)."""
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
+
+
+TOKENS_PER_TASK = 250_000
+"""Build-step work target per task, in tokens (``total_dl`` summed over
+fields). On the 4-core host, the Arrow tokenize + block-encode kernels
+run at ~660k tokens/s on one core (a 1500-doc corpus: ~0.92M tokens,
+0.65 s tokenize + 0.74 s encode), and a Python task costs ~145 ms
+against ~50 ms for a JVM-only one. 250k tokens is ~0.4 s of kernel
+time, four times that ~100 ms per-task surcharge. A 500-doc index
+(~0.24M tokens) and each group of a 1500-doc index in 4 groups get one
+task per step."""
+
+
+def task_count(tokens: float, cap: int) -> int:
+    """Tasks for a build step over ``tokens`` tokens: one per
+    ``TOKENS_PER_TASK``, at least 1, at most ``cap`` (the step's fixed
+    count before sizing, so large builds keep their shape)."""
+    return max(1, min(int(cap), -(-int(tokens) // TOKENS_PER_TASK)))
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -169,9 +249,8 @@ class IndexBuilder:
                 )
             offsets = pd.read_parquet(self.paths.offsets)
             return offsets
-        docs = prepare_docs(docs_raw)
         offsets, stats = compute_plan(
-            _ensure_parallelism(docs),
+            ensure_parallelism(prepare_docs(docs_raw)),
             self.params.fields,
             self.params.num_buckets,
             self.params.block_size,
@@ -181,6 +260,20 @@ class IndexBuilder:
         stats.to_parquet(self.paths.stats, index=False)
         _atomic_write_json(self.paths.params, self.params.to_dict())
         return offsets
+
+    # ---------- step sizes ----------
+
+    def _tokens(self, g: int | None = None) -> float:
+        """Tokens of bucket group ``g`` (of the whole index for None),
+        from the plan's artifacts: ``total_dl`` summed over fields,
+        times the group's share of the offsets' ``n_docs``."""
+        total = float(pd.read_parquet(self.paths.stats)["total_dl"].sum())
+        if g is None:
+            return total
+        offsets = pd.read_parquet(self.paths.offsets)
+        n = offsets["n_docs"]
+        in_group = offsets["bucket"] % self.n_groups == g
+        return total * float(n[in_group].sum()) / max(int(n.sum()), 1)
 
     # ---------- per-group build ----------
 
@@ -232,37 +325,47 @@ class IndexBuilder:
         stats = pd.read_parquet(self.paths.stats)
         self.write_docs(docs_raw, offsets)  # no-op once committed
 
+        par = self.spark.sparkContext.defaultParallelism
+        tok = self._tokens(g)
+        n_split = task_count(tok, 2 * par)
+        n_ranges = task_count(tok, max(par, 4))
+
         # partition-pruned scan of this group's docs (written by
         # write_docs); lineage checksum comes from durable bytes
-        persisted = self.spark.read.parquet(self.paths.docs).filter(
+        persisted = read_table(self.spark, "docs", self.paths.docs).filter(
             F.col("group") == g
         )
-        tokens = token_rows(
-            _ensure_parallelism(persisted), params.fields, params.positionless
+        split = persisted
+        if split.rdd.getNumPartitions() < n_split:
+            # a small group collapses into one or two scan splits;
+            # spread the Arrow tokenize kernel over n_split tasks
+            split = split.repartition(n_split)
+        tokens = token_rows(split, params.fields, params.positionless)
+        postings = build_postings(
+            tokens,
+            stats,
+            params,
+            task_count(
+                tok, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            ),
         )
-        from pyspark import StorageLevel
+        if n_ranges > 1:
+            from pyspark import StorageLevel
 
-        # Persist the encoded blocks before the range exchange: a
-        # RangePartitioning exchange SAMPLES its child to pick bounds,
-        # and that sample job re-executes the whole post-shuffle
-        # chain (partition sort + Arrow encode kernel) a second time.
-        # With the cache, tokenize+encode runs exactly once and the
-        # sample + main exchange read compressed posting blocks from
-        # cache. MEMORY_AND_DISK: blocks are the SMALLEST form of the
-        # data (delta+varint/FOR-packed), far smaller than the token
-        # rows that produced them, so caching them is strictly
-        # cheaper than recomputing the encode at any scale.
-        postings = build_postings(tokens, stats, params).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+            # Persist the encoded blocks before the range exchange: a
+            # RangePartitioning exchange over more than one partition
+            # SAMPLES its child to pick bounds, and that sample job
+            # re-executes the whole post-shuffle chain (partition sort
+            # + Arrow encode kernel) a second time. With the cache,
+            # tokenize+encode runs exactly once. MEMORY_AND_DISK:
+            # blocks are the SMALLEST form of the data, far smaller
+            # than the token rows that produced them.
+            postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
         post_out = os.path.join(self.paths.postings, f"group={g}")
         try:
             (
                 postings.repartitionByRange(
-                    max(self.spark.sparkContext.defaultParallelism, 4),
-                    "field",
-                    "term",
-                    "block_id",
+                    n_ranges, "field", "term", "block_id"
                 )
                 .sortWithinPartitions("field", "term", "block_id")
                 .write.mode("overwrite")
@@ -296,31 +399,37 @@ class IndexBuilder:
     # ---------- finalize ----------
 
     def finalize(self) -> None:
-        from pyspark import StorageLevel
-
-        postings = self.spark.read.parquet(self.paths.postings)
-        # persist the aggregated dictionary before the range exchange:
-        # the range sampler re-executes its child, which here is the
-        # full posting scan + groupBy — cached, that runs once (same
-        # fix as the posting write in build_group)
-        term_dict = term_dict_from_postings(postings).persist(
-            StorageLevel.MEMORY_AND_DISK
+        tok = self._tokens()
+        n_ranges = task_count(
+            tok, max(self.spark.sparkContext.defaultParallelism // 2, 2)
         )
+        term_dict = term_dict_from_postings(
+            read_table(self.spark, "postings", self.paths.postings)
+        )
+        if n_ranges > 1:
+            from pyspark import StorageLevel
+
+            # the range sampler re-executes its child, the full posting
+            # scan + groupBy — cached, that runs once (same fix as the
+            # posting write in build_group)
+            term_dict = term_dict.persist(StorageLevel.MEMORY_AND_DISK)
         # field=dir partitioning + term sort: a content-field lookup
         # never touches the (much larger) file_name/file_path
         # dictionaries, and prefix ranges prune row groups
         try:
             term_dict.repartitionByRange(
-                max(self.spark.sparkContext.defaultParallelism // 2, 2),
-                "field",
-                "term",
+                n_ranges, "field", "term"
             ).sortWithinPartitions("term").write.mode("overwrite").partitionBy(
                 "field"
             ).parquet(self.paths.term_dict)
         finally:
             term_dict.unpersist()
-        hints = hints_from_term_dict(self.spark.read.parquet(self.paths.term_dict))
-        hints.coalesce(4).write.mode("overwrite").parquet(self.paths.hints)
+        hints = hints_from_term_dict(
+            read_table(self.spark, "term_dict", self.paths.term_dict)
+        )
+        hints.coalesce(task_count(tok, 4)).write.mode("overwrite").parquet(
+            self.paths.hints
+        )
         _atomic_write_json(
             self.paths.finalized_marker,
             {"status": "finalized", "n_groups": self.n_groups},
@@ -383,9 +492,9 @@ class IndexReader:
 
     ``params`` is read at open; each table frame (``docs``,
     ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
-    first access and then held, so a query does not re-run Parquet
-    schema inference and file listing per access. The held frames
-    keep the file listing they were opened with: reopen the reader
+    first access, with its declared schema, and then held, so a query
+    does not re-list files per access. The held frames keep the file
+    listing they were opened with: reopen the reader
     after rebuilding or compacting its directory."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -395,19 +504,19 @@ class IndexReader:
 
     @functools.cached_property
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.docs)
+        return read_table(self.spark, "docs", self.paths.docs)
 
     @functools.cached_property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.postings)
+        return read_table(self.spark, "postings", self.paths.postings)
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.term_dict)
+        return read_table(self.spark, "term_dict", self.paths.term_dict)
 
     @functools.cached_property
     def hints(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.hints)
+        return read_table(self.spark, "hints", self.paths.hints)
 
     @functools.cached_property
     def stats(self) -> pd.DataFrame:

@@ -50,10 +50,12 @@ from codeindex_spark.index.build import (
     prepare_docs,
 )
 from codeindex_spark.index.segments import (
+    DOC_COLUMNS,
     IndexBuilder,
     IndexPaths,
     IndexReader,
     _atomic_write_json,
+    read_table,
 )
 
 CHANGE_TYPES = ("Created", "Changed", "Deleted", "Renamed")
@@ -283,8 +285,20 @@ def _read_segments(spark: SparkSession, segs: list[dict], table: str) -> DataFra
     """One segment table (an ``IndexPaths`` name: ``docs``,
     ``term_dict``, ...) unioned across ``segs``."""
     return _union(
-        [spark.read.parquet(getattr(IndexPaths(s["dir"]), table)) for s in segs]
+        [
+            read_table(spark, table, getattr(IndexPaths(s["dir"]), table))
+            for s in segs
+        ]
     )
+
+
+def _up_to(frame: DataFrame, as_of: int | None) -> DataFrame:
+    """Rows of an epoch-tagged log (tombstones, removed words) visible
+    at ``as_of``. Rows written before epochs existed read ``epoch`` as
+    NULL and stay visible at every epoch."""
+    if as_of is None:
+        return frame
+    return frame.filter(F.coalesce(F.col("epoch"), F.lit(0)) <= as_of)
 
 
 def _live(docs: DataFrame, tomb: DataFrame | None) -> DataFrame:
@@ -484,43 +498,81 @@ class IncrementalIndex:
                 "updates must carry a new commit (doc identity is "
                 "(repo, path, commit))"
             )
-        changed = rec.filter(F.col("action").isin("add", "update")).select(
+        # Hold the O(delta) changed rows apart from the tombstones they
+        # were reconciled against: appending to the tombstones makes
+        # Spark refresh every cached plan that reads them, and the
+        # delta build would then re-run the whole reconcile.
+        delta = rec.filter(F.col("action") != "unchanged").localCheckpoint()
+        rec.unpersist()
+        changed = delta.filter(F.col("action").isin("add", "update")).select(
             "repo", "path", "commit", "lang", "content"
         )
-        dead_keys = rec.filter(F.col("action").isin("update", "delete")).select(
+        # the old keys are live docs' keys: unique and never
+        # tombstoned, so no distinct() or tombstone anti-join
+        dead_keys = delta.filter(F.col("action").isin("update", "delete")).select(
             F.col("old_doc_key").alias("doc_key")
         )
-        self.apply_changes(changed, dead_keys)
-        rec.unpersist()
+        self._apply(
+            changed,
+            dead_keys,
+            n_new=counts.get("add", 0) + counts.get("update", 0),
+            n_dead=counts.get("update", 0) + counts.get("delete", 0),
+        )
         return counts
 
     def apply_changes(
         self, new_docs: DataFrame, dead_doc_keys: DataFrame | None
     ) -> None:
+        """Upsert ``new_docs`` and tombstone ``dead_doc_keys``; keys
+        repeated or already tombstoned are tombstoned once."""
+        dead = dead_doc_keys
+        sides = [new_docs.select(F.lit(True).alias("new"))]
+        if dead is not None:
+            dead = dead.select("doc_key").distinct()
+            if os.path.exists(self._tomb_dir):
+                # idempotence: never double-tombstone (would also
+                # double-count removed hint words)
+                dead = dead.join(
+                    read_table(self.spark, "tombstones", self._tomb_dir),
+                    "doc_key",
+                    "left_anti",
+                )
+            # truncate lineage before appending to the tombstones the
+            # keys were filtered against
+            dead = dead.localCheckpoint()
+            sides.append(dead.select(F.lit(False).alias("new")))
+        row = (
+            _union(sides)
+            .agg(
+                F.count(F.when(F.col("new"), True)).alias("n_new"),
+                F.count(F.when(~F.col("new"), True)).alias("n_dead"),
+            )
+            .collect()[0]
+        )
+        self._apply(new_docs, dead, row["n_new"], row["n_dead"])
+
+    def _apply(
+        self,
+        new_docs: DataFrame,
+        dead: DataFrame | None,
+        n_new: int,
+        n_dead: int,
+    ) -> None:
+        """One apply at the next epoch: tombstone the ``n_dead`` keys
+        of ``dead`` (none already tombstoned), then build the ``n_new``
+        docs of ``new_docs`` as a delta segment and commit it to
+        ``_segments.json``. Neither frame may still read the tombstones
+        (callers localCheckpoint what they derived from them)."""
         state = self._state()
         segs = state["segments"]
         if not segs:
             raise RuntimeError("build_base first")
         epoch = state["n_applies"] + 1
-        n_new = new_docs.count()
-        if dead_doc_keys is not None:
-            dead = dead_doc_keys.distinct()
-            if os.path.exists(self._tomb_dir):
-                # idempotence: never double-tombstone (would also
-                # double-count removed hint words)
-                dead = dead.join(
-                    self.spark.read.parquet(self._tomb_dir),
-                    "doc_key",
-                    "left_anti",
-                )
-            # truncate lineage before appending to the same path we
-            # just read from
-            dead = dead.localCheckpoint()
-            if dead.count():
-                self._record_removed_words(dead, epoch)
-                dead.withColumn("epoch", F.lit(epoch)).write.mode(
-                    "append"
-                ).parquet(self._tomb_dir)
+        if n_dead:
+            self._record_removed_words(dead, epoch)
+            dead.withColumn("epoch", F.lit(epoch)).write.mode(
+                "append"
+            ).parquet(self._tomb_dir)
         if n_new:
             idx = len(segs)
             seg_dir = os.path.join(self.root, "deltas", f"d{idx:04d}")
@@ -591,10 +643,9 @@ class IncrementalIndex:
         no tombstones)."""
         if not os.path.exists(self._tomb_dir):
             return None
-        tomb = self.spark.read.parquet(self._tomb_dir)
-        if as_of is not None and "epoch" in tomb.columns:
-            tomb = tomb.filter(F.col("epoch") <= as_of)
-        return tomb
+        return _up_to(
+            read_table(self.spark, "tombstones", self._tomb_dir), as_of
+        )
 
     def live_docs(self, as_of: int | None = None) -> DataFrame:
         return _live(self.all_docs(as_of), self._tombstones(as_of))
@@ -902,7 +953,11 @@ class IncrementalIndex:
             .partitionBy("field")
             .parquet(os.path.join(mp.postings, "group=0"))
         )
-        live.write.mode("overwrite").partitionBy("group").parquet(mp.docs)
+        # the tombstone anti-join put doc_key first: write the docs
+        # table's own column order
+        live.select(*DOC_COLUMNS, "group").write.mode("overwrite").partitionBy(
+            "group"
+        ).parquet(mp.docs)
         stats.to_parquet(mp.stats, index=False)
         _atomic_write_json(mp.params, self.params.to_dict())
         # offsets are a planning artifact of the original base; the
@@ -910,7 +965,7 @@ class IncrementalIndex:
         pd.read_parquet(IndexPaths(segs[0]["dir"]).offsets).to_parquet(
             mp.offsets, index=False
         )
-        td = term_dict_from_postings(spark.read.parquet(mp.postings))
+        td = term_dict_from_postings(read_table(spark, "postings", mp.postings))
         (
             td.repartitionByRange(max(par // 2, 2), "field", "term")
             .sortWithinPartitions("term")
@@ -918,7 +973,7 @@ class IncrementalIndex:
             .partitionBy("field")
             .parquet(mp.term_dict)
         )
-        hints_from_term_dict(spark.read.parquet(mp.term_dict)).coalesce(
+        hints_from_term_dict(read_table(spark, "term_dict", mp.term_dict)).coalesce(
             4
         ).write.mode("overwrite").parquet(mp.hints)
 
@@ -954,9 +1009,9 @@ class MultiReader:
 
     The segment list is pinned at open; each table frame (``docs``,
     ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
-    first access and then held, so a query does not re-run Parquet
-    schema inference and file listing per access. The held frames
-    keep the file listing they were opened with: reopen the reader
+    first access, with its declared schema, and then held, so a query
+    does not re-list files per access. The held frames keep the file
+    listing they were opened with: reopen the reader
     after apply_*(), compact() or merge_compact(). Every access checks
     ``_segments.json`` (no Spark job): a latest-view reader raises
     ValueError once the index has changed; an ``as_of`` reader keeps
@@ -1034,7 +1089,7 @@ class MultiReader:
                 ]
             )
             frames.append(
-                self.spark.read.parquet(IndexPaths(s["dir"]).postings)
+                read_table(self.spark, "postings", IndexPaths(s["dir"]).postings)
                 .withColumn("_ub_scale", mapping[F.col("field")])
             )
         return _union(frames)
@@ -1042,8 +1097,10 @@ class MultiReader:
     @_held
     def term_dict(self) -> DataFrame:
         if self.as_of is None:
-            return self.spark.read.parquet(
-                os.path.join(self.inc.root, "merged", "term_dict.parquet")
+            return read_table(
+                self.spark,
+                "term_dict",
+                os.path.join(self.inc.root, "merged", "term_dict.parquet"),
             )
         # snapshot read: merge the prefix's dictionaries on the fly
         # (the persisted merged/ artifacts only describe the latest
@@ -1071,9 +1128,9 @@ class MultiReader:
         )
         rw_dir = self.inc._removed_words_dir
         if os.path.exists(rw_dir):
-            rw = self.spark.read.parquet(rw_dir)
-            if self.as_of is not None and "epoch" in rw.columns:
-                rw = rw.filter(F.col("epoch") <= self.as_of)
+            rw = _up_to(
+                read_table(self.spark, "removed_words", rw_dir), self.as_of
+            )
             rw = rw.groupBy("word").agg(F.sum("removed").alias("removed"))
             return td.join(rw, "word", "left").fillna({"removed": 0})
         return td.withColumn("removed", F.lit(0))

@@ -174,6 +174,42 @@ def test_resume_skips_committed_and_is_identical(spark, tmp_path):
     assert posting_set(d) == posting_set(d2)
 
 
+def test_step_sizes_do_not_change_the_index(spark, tmp_path, monkeypatch):
+    """The plan-sized build (one task per step at this size) and the
+    build with every step at its cap (several splits, sampled range
+    exchanges over cached blocks) write the same index."""
+    from codeindex_spark.index import segments
+
+    docs = spark_documents(spark, SPEC, partitions=4)
+
+    def build(name):
+        d = str(tmp_path / name)
+        IndexBuilder(spark, d, PARAMS, n_groups=2).build(docs, resume=False)
+        r = IndexReader(spark, d)
+        posting_cols = [c for c in r.postings.columns if c != "group"]
+        return d, tuple(
+            sorted(
+                tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+                for row in frame.collect()
+            )
+            for frame in (
+                r.postings.select(*posting_cols),
+                r.term_dict,
+                r.hints,
+            )
+        )
+
+    sized_dir, sized = build("sized")
+    monkeypatch.setattr(segments, "TOKENS_PER_TASK", 1)
+    capped_dir, capped = build("capped")
+    assert sized == capped
+
+    def n_files(d):
+        return len(glob.glob(os.path.join(d, "postings", "*", "*", "*.parquet")))
+
+    assert n_files(sized_dir) < n_files(capped_dir)
+
+
 def test_manifest_metrics(index_dir):
     files = sorted(glob.glob(os.path.join(index_dir, "manifest", "group_*.json")))
     assert len(files) == 4

@@ -6,6 +6,9 @@ passes every value-correctness test while becoming a corpus scan at
 
 from __future__ import annotations
 
+import itertools
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,10 +46,14 @@ def _final_plan(df):
     return plan
 
 
+_GROUPS = itertools.count()
+
+
 def _jobs_in(spark, fn) -> list[int]:
-    """Spark job ids launched while ``fn()`` runs (one job group)."""
+    """Spark job ids launched while ``fn()`` runs (a job group of its
+    own: the status tracker keeps a group's jobs across calls)."""
     sc = spark.sparkContext
-    group = "plan-shapes-job-count"
+    group = f"plan-shapes-job-count-{next(_GROUPS)}"
     sc.setJobGroup(group, "count jobs")
     try:
         fn()
@@ -54,6 +61,46 @@ def _jobs_in(spark, fn) -> list[int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _scala(seq) -> list:
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _sampling_jobs(spark, job_ids) -> list[int]:
+    """The range-exchange bound-sampling jobs among ``job_ids``: the
+    job's result stage writes neither shuffle nor files, and its last
+    RDD belongs to an Exchange (RangePartitioner sampling the
+    exchange's input). Shuffle-map jobs write shuffle bytes, writes
+    write files, collects end outside an Exchange."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def last_scope(stage_id) -> str:
+        best, scope = -1, ""
+        todo = [store.operationGraphForStage(stage_id).rootCluster()]
+        while todo:
+            cluster = todo.pop()
+            for node in _scala(cluster.childNodes()):
+                if node.id() > best:
+                    best, scope = node.id(), cluster.name()
+            todo.extend(_scala(cluster.childClusters()))
+        return scope
+
+    out = []
+    for j in job_ids:
+        stage = max(_scala(store.job(j).stageIds()))
+        data = store.lastStageAttempt(stage)
+        if (
+            data.shuffleWriteBytes() == 0
+            and data.outputBytes() == 0
+            and last_scope(stage) == "Exchange"
+        ):
+            out.append(j)
+    return out
 
 
 def test_term_query_pushes_field_and_term_to_scan(engine):
@@ -191,6 +238,57 @@ def test_phrase_wildcard_slot_reuses_expansion(spark, engine):
     assert jobs == []
     assert engine._expand_cache[key] is entry
     assert engine.search(q, k=5).collect() == first
+
+
+def test_small_build_takes_no_range_sample(spark, tmp_path):
+    """A 40-doc build sizes every step to one task from its plan: the
+    posting and dictionary range exchanges have one partition, so
+    Spark takes no bound sample, and the build's job count is pinned
+    (23 before: the range exchanges sampled, the tokenize input was
+    round-robined, and each read-back table ran a footer-inference
+    job)."""
+    docs = spark_documents(spark, CorpusSpec(n_docs=40), partitions=4)
+    builder = IndexBuilder(spark, str(tmp_path / "small"), PARAMS, n_groups=1)
+    jobs = _jobs_in(spark, lambda: builder.build(docs, resume=False))
+    assert _sampling_jobs(spark, jobs) == []
+    assert len(jobs) == 15
+
+
+def test_apply_jobs_do_not_grow_with_segments(spark, tmp_path):
+    """A snapshot apply costs the same jobs at any segment count: the
+    3rd apply (3 segments stacked) launches no more than the 1st. A
+    delete before the 1st apply gives every apply tombstones to read
+    (the first tombstones add one broadcast to the live-docs
+    anti-join, whatever the segment count)."""
+    cols = ["repo", "path", "commit", "lang", "content"]
+    cur = generate_documents(CorpusSpec(n_docs=40))[cols]
+    inc = IncrementalIndex(spark, str(tmp_path / "inc"), PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(cur))
+    first = inc.live_docs().filter(F.col("path") == cur["path"].iloc[0])
+    inc.apply_changes(
+        spark.createDataFrame(cur).limit(0), first.select("doc_key")
+    )
+    cur = cur.iloc[1:].reset_index(drop=True)
+    n_jobs = []
+    for step in (1, 2, 3):
+        nxt = cur.iloc[:-1].copy()  # delete the last doc
+        nxt.loc[step, "content"] = f"get updated content step{step}"
+        nxt.loc[step, "commit"] = f"cstep{step:09d}"
+        added = pd.DataFrame(
+            [("repo_new", f"src/Added{step}.py", "cadd00000001", "python",
+              f"get added content step{step}")],
+            columns=cols,
+        )
+        nxt = pd.concat([nxt, added], ignore_index=True)
+        snap = spark.createDataFrame(nxt)
+        counts = {}
+        n_jobs.append(
+            len(_jobs_in(spark, lambda: counts.update(inc.apply_snapshot(snap))))
+        )
+        assert (counts["add"], counts["update"], counts["delete"]) == (1, 1, 1)
+        cur = nxt
+    assert len(inc.segments()) == 4
+    assert n_jobs[2] <= n_jobs[0], n_jobs
 
 
 def test_facets_single_group_shuffle(engine):

@@ -477,6 +477,155 @@ def test_merge_compact_equals_fresh_scores(spark, tmp_path, versions):
     assert wand == exact
 
 
+def test_declared_schemas_match_written_tables(spark, tmp_path, versions):
+    """The engine opens its tables with declared schemas
+    (``TABLE_SCHEMAS``), under which a renamed or missing column reads
+    as NULL: every table a build, an apply, merge_indexes,
+    merge_compact and compact write must infer to exactly that
+    schema."""
+    from codeindex_spark.index.merge import merge_indexes
+    from codeindex_spark.index.segments import TABLE_SCHEMAS, IndexPaths
+
+    v1, v2, _ = versions
+    v3 = v2.drop(index=0).reset_index(drop=True)
+    v3.loc[4, "content"] = "second apply content"
+    v3.loc[4, "commit"] = "cschemadrift3"
+    inc = IncrementalIndex(spark, str(tmp_path / "drift"), PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    inc.apply_snapshot(spark.createDataFrame(v3))
+
+    def check(table, path):
+        got = spark.read.parquet(path).schema
+        assert got == TABLE_SCHEMAS[table], (path, got.simpleString())
+
+    def check_index(index_dir):
+        paths = IndexPaths(index_dir)
+        for table in ("docs", "postings", "term_dict", "hints"):
+            check(table, getattr(paths, table))
+
+    segs = inc.segments()
+    assert len(segs) == 3
+    for seg in segs:
+        check_index(seg["dir"])
+    check("tombstones", inc._tomb_dir)
+    check("removed_words", inc._removed_words_dir)
+    check("term_dict", os.path.join(inc.root, "merged", "term_dict.parquet"))
+    merged_dir = str(tmp_path / "drift_merged")
+    merge_indexes(spark, [seg["dir"] for seg in segs], merged_dir)
+    check_index(merged_dir)
+    inc.merge_compact()
+    check_index(inc.segments()[0]["dir"])
+    inc.compact()
+    check_index(inc.segments()[0]["dir"])
+    check("term_dict", os.path.join(inc.root, "merged", "term_dict.parquet"))
+
+
+def _index_state(inc):
+    """What a latest reader serves, plus the tombstone and
+    removed-word logs: live docs, top-k, hints, log rows."""
+    rdr = inc.reader()
+    eng = SearchEngine(rdr)
+    return {
+        "live": sorted(
+            tuple(r) for r in rdr.docs.select("doc_id", "path", "commit").collect()
+        ),
+        "topk": [
+            (r["doc_id"], round(r["score"], 9))
+            for r in eng.search("get OR uniquenewterm", k=20).collect()
+        ],
+        "hints": sorted(r["word"] for r in rdr.hints.collect()),
+        "tombstones": _log_rows(inc, inc._tomb_dir, "doc_key", "epoch"),
+        "removed": _log_rows(
+            inc, inc._removed_words_dir, "word", "removed", "epoch"
+        ),
+    }
+
+
+def _log_rows(inc, path, *cols):
+    rows = inc.spark.read.parquet(path).select(*cols).collect()
+    return sorted(tuple(r) for r in rows)
+
+
+def test_apply_crash_before_commit_then_retry(
+    spark, tmp_path, versions, monkeypatch
+):
+    """A crash between the tombstone append and the _segments.json
+    write (here: the delta build raises) leaves the tombstones and
+    removed words visible to a latest reader, without the new
+    versions; the pre-apply epoch still reads the old state. A
+    retried apply_snapshot then ends exactly where an uncrashed apply
+    does, removed words counted once."""
+    from codeindex_spark.index.segments import IndexBuilder
+
+    v1, v2, deleted_path = versions
+    updated_path = v1.loc[2, "path"]
+
+    def base(name):
+        inc = IncrementalIndex(spark, str(tmp_path / name), PARAMS, n_groups=1)
+        inc.build_base(spark.createDataFrame(v1))
+        return inc
+
+    ref = base("uncrashed")
+    ref.apply_snapshot(spark.createDataFrame(v2))
+    inc = base("crashed")
+
+    def crash(self, docs_raw, resume=True):
+        raise RuntimeError("injected crash in the delta build")
+
+    with monkeypatch.context() as m:
+        m.setattr(IndexBuilder, "build", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            inc.apply_snapshot(spark.createDataFrame(v2))
+
+    # the crash window: nothing committed, the logs already appended
+    assert inc.n_applies() == 0 and len(inc.segments()) == 1
+    assert os.path.exists(inc._tomb_dir)
+    assert os.path.exists(inc._removed_words_dir)
+    gone = {updated_path, deleted_path}
+    live = {r["path"] for r in inc.reader().docs.select("path").collect()}
+    assert live == set(v1["path"]) - gone
+    eng = SearchEngine(inc.reader())
+    assert eng.search("uniquenewterm", k=10).count() == 0
+    assert eng.search("addeddocterm", k=10).count() == 0
+    assert inc.live_docs(as_of=0).count() == len(v1)
+
+    counts = inc.apply_snapshot(spark.createDataFrame(v2))
+    # the old version of the update is already tombstoned, so the new
+    # one reconciles as an add; the delete was already applied
+    assert counts.get("add") == 2
+    assert "update" not in counts and "delete" not in counts
+    assert inc.n_applies() == 1
+    assert _index_state(inc) == _index_state(ref)
+
+
+def test_apply_changes_tombstones_each_key_once(spark, tmp_path, versions):
+    """apply_changes deduplicates its keys and skips already
+    tombstoned ones: neither log records a key twice."""
+    v1, v2, _ = versions
+    inc = IncrementalIndex(spark, str(tmp_path / "idem"), PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    before = _index_state(inc)
+    dead = spark.createDataFrame(
+        [(k,) for k, _epoch in before["tombstones"]] * 2, ["doc_key"]
+    )
+    no_docs = spark.createDataFrame(v1).limit(0)
+    inc.apply_changes(no_docs, dead)
+    assert inc.n_applies() == 2
+    assert _index_state(inc) == before
+
+    # one live key, given twice next to the tombstoned ones: recorded once
+    live_key = inc.live_docs().filter(F.col("path") == v1.loc[0, "path"])
+    live_key = live_key.select("doc_key").collect()[0]["doc_key"]
+    twice = spark.createDataFrame([(live_key,)] * 2, ["doc_key"])
+    inc.apply_changes(no_docs, dead.unionByName(twice))
+    after = _index_state(inc)
+    assert after["tombstones"] == sorted(before["tombstones"] + [(live_key, 3)])
+    removed = [n for _word, n, epoch in after["removed"] if epoch == 3]
+    assert removed and set(removed) == {1}  # the one doc, counted once
+
+
 def test_maintain_stream(spark, tmp_path):
     v1 = generate_documents(CorpusSpec(n_docs=20))
     root = str(tmp_path / "stream_idx")

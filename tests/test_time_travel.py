@@ -4,6 +4,9 @@ the k-th apply — scores included — after later applies land."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -182,3 +185,58 @@ def test_as_of_reader_after_compact_raises(one_apply):
     inc.compact()
     with pytest.raises(ValueError, match="generation"):
         SearchEngine(rdr).search(STALE_QUERY, k=5)
+
+
+def test_logs_without_epoch_stay_visible_at_every_epoch(spark, tmp_path):
+    """Tombstones and removed words written before epochs existed have
+    no ``epoch`` column. Opened with the declared schema, it reads as
+    NULL, and such rows stay visible at every epoch, as they were when
+    the files were read with an inferred schema: live_docs(),
+    reader() and reader(as_of=k) serve the same docs and hints."""
+    v1 = generate_documents(CorpusSpec(n_docs=30))
+    inc = IncrementalIndex(spark, str(tmp_path / "legacy"), PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    v2 = v1.copy()
+    v2.loc[2, "content"] = "replacement legacyterm content here"
+    v2.loc[2, "commit"] = "clegacy000001"
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    inc.apply_snapshot(spark.createDataFrame(v2.drop(index=5)))
+
+    def keys(docs):
+        return {r["doc_key"] for r in docs.select("doc_key").collect()}
+
+    def hints(rdr):
+        return {r["word"] for r in rdr.hints.collect()}
+
+    latest_docs, latest_hints = keys(inc.live_docs()), hints(inc.reader())
+    # rewrite both logs in the pre-epoch layout
+    for path in (inc._tomb_dir, inc._removed_words_dir):
+        legacy = pd.read_parquet(path).drop(columns="epoch")
+        shutil.rmtree(path)
+        os.makedirs(path)
+        legacy.to_parquet(os.path.join(path, "part-00000.parquet"), index=False)
+    assert "epoch" not in spark.read.parquet(inc._tomb_dir).columns
+    tomb = set(pd.read_parquet(inc._tomb_dir)["doc_key"])
+    removed = (
+        pd.read_parquet(inc._removed_words_dir).groupby("word")["removed"].sum()
+    )
+    assert len(tomb) == 2 and len(removed)
+
+    assert keys(inc.live_docs()) == latest_docs
+    assert hints(inc.reader()) == latest_hints
+    for k in (0, 1, 2):
+        rdr = inc.reader(as_of=k)
+        want_docs = keys(inc.all_docs(as_of=k)) - tomb
+        assert keys(inc.live_docs(as_of=k)) == want_docs
+        assert keys(rdr.docs) == want_docs
+        td = (
+            rdr.term_dict.filter(F.col("field") == "content_cs")
+            .select("term", "df")
+            .toPandas()
+        )
+        want_hints = {
+            t
+            for t, df in zip(td["term"], td["df"])
+            if 4 <= len(t) <= 199 and df > removed.get(t, 0)
+        }
+        assert hints(rdr) == want_hints, k
