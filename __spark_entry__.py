@@ -197,7 +197,7 @@ def _engine_merged(spark: SparkSession, sf_dir: str):
     from codeindex_spark.query.planner import SearchEngine
 
     tag = hashlib.sha256(key.encode()).hexdigest()[:12]
-    base = f"/tmp/codeindex_entry/{os.path.basename(os.path.abspath(sf_dir))}_{tag}_mg1"
+    base = f"/tmp/codeindex_entry/{os.path.basename(os.path.abspath(sf_dir))}_{tag}_mg2"
     merged_dir = os.path.join(base, "m")
     if not os.path.exists(
         os.path.join(merged_dir, "manifest", "_finalized.json")

@@ -172,11 +172,16 @@ def decode_positions_rows(
 
 
 def bm25_tfnorm(
-    tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float = 1.2, b: float = 0.75
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    avgdl: float | np.ndarray,
+    k1: float = 1.2,
+    b: float = 0.75,
 ) -> np.ndarray:
     """BM25 term-frequency normalization (idf applied separately —
     idf is per-term constant, so block-max stores max tfnorm and the
-    score upper bound is idf * block_max_tfnorm)."""
+    score upper bound is idf * block_max_tfnorm). ``avgdl`` is one
+    field's value or a per-entry array (entries of several fields)."""
     tf = tfs.astype(np.float64)
     dl = dls.astype(np.float64)
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))

@@ -158,6 +158,76 @@ def _atomic_write_json(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
+def write_postings(
+    postings: DataFrame, path: str, n_ranges: int, partition_by: tuple
+) -> None:
+    """Write posting blocks in the standard layout: ``n_ranges``
+    (field, term, block_id) ranges, sorted within each, partitioned by
+    the ``partition_by`` columns."""
+    if n_ranges > 1:
+        from pyspark import StorageLevel
+
+        # Persist the blocks before the range exchange: a
+        # RangePartitioning exchange over more than one partition
+        # SAMPLES its child to pick bounds, and that sample job
+        # re-executes the whole chain that made the blocks (a build's
+        # partition sort + Arrow encode kernel, a merge's rewrite
+        # kernel) a second time. With the cache it runs exactly once.
+        # MEMORY_AND_DISK: blocks are the SMALLEST form of the data,
+        # far smaller than the token rows that produced them.
+        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        (
+            postings.repartitionByRange(n_ranges, "field", "term", "block_id")
+            .sortWithinPartitions("field", "term", "block_id")
+            .write.mode("overwrite")
+            .partitionBy(*partition_by)
+            .parquet(path)
+        )
+    finally:
+        postings.unpersist()
+
+
+def finalize_index(
+    spark: SparkSession, paths: IndexPaths, tokens: float, n_groups: int
+) -> None:
+    """The tail of every index writer (a build, a merge): the term
+    dictionary summed from the WRITTEN postings, the hints derived
+    from it and the ``_finalized.json`` marker. Step sizes come from
+    ``task_count`` over the index's ``tokens``."""
+    n_ranges = task_count(
+        tokens, max(spark.sparkContext.defaultParallelism // 2, 2)
+    )
+    term_dict = term_dict_from_postings(
+        read_table(spark, "postings", paths.postings)
+    )
+    if n_ranges > 1:
+        from pyspark import StorageLevel
+
+        # the range sampler re-executes its child, the full posting
+        # scan + groupBy — cached, that runs once (same fix as
+        # write_postings)
+        term_dict = term_dict.persist(StorageLevel.MEMORY_AND_DISK)
+    # field=dir partitioning + term sort: a content-field lookup never
+    # touches the (much larger) file_name/file_path dictionaries, and
+    # prefix ranges prune row groups
+    try:
+        term_dict.repartitionByRange(
+            n_ranges, "field", "term"
+        ).sortWithinPartitions("term").write.mode("overwrite").partitionBy(
+            "field"
+        ).parquet(paths.term_dict)
+    finally:
+        term_dict.unpersist()
+    hints = hints_from_term_dict(read_table(spark, "term_dict", paths.term_dict))
+    hints.coalesce(task_count(tokens, 4)).write.mode("overwrite").parquet(
+        paths.hints
+    )
+    _atomic_write_json(
+        paths.finalized_marker, {"status": "finalized", "n_groups": n_groups}
+    )
+
+
 @dataclass
 class IndexPaths:
     root: str
@@ -349,31 +419,12 @@ class IndexBuilder:
                 tok, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             ),
         )
-        if n_ranges > 1:
-            from pyspark import StorageLevel
-
-            # Persist the encoded blocks before the range exchange: a
-            # RangePartitioning exchange over more than one partition
-            # SAMPLES its child to pick bounds, and that sample job
-            # re-executes the whole post-shuffle chain (partition sort
-            # + Arrow encode kernel) a second time. With the cache,
-            # tokenize+encode runs exactly once. MEMORY_AND_DISK:
-            # blocks are the SMALLEST form of the data, far smaller
-            # than the token rows that produced them.
-            postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-        post_out = os.path.join(self.paths.postings, f"group={g}")
-        try:
-            (
-                postings.repartitionByRange(
-                    n_ranges, "field", "term", "block_id"
-                )
-                .sortWithinPartitions("field", "term", "block_id")
-                .write.mode("overwrite")
-                .partitionBy("field")
-                .parquet(post_out)
-            )
-        finally:
-            postings.unpersist()
+        write_postings(
+            postings,
+            os.path.join(self.paths.postings, f"group={g}"),
+            n_ranges,
+            ("field",),
+        )
 
         summary = persisted.agg(
             F.count(F.lit(1)).alias("n_files"),
@@ -399,41 +450,7 @@ class IndexBuilder:
     # ---------- finalize ----------
 
     def finalize(self) -> None:
-        tok = self._tokens()
-        n_ranges = task_count(
-            tok, max(self.spark.sparkContext.defaultParallelism // 2, 2)
-        )
-        term_dict = term_dict_from_postings(
-            read_table(self.spark, "postings", self.paths.postings)
-        )
-        if n_ranges > 1:
-            from pyspark import StorageLevel
-
-            # the range sampler re-executes its child, the full posting
-            # scan + groupBy — cached, that runs once (same fix as the
-            # posting write in build_group)
-            term_dict = term_dict.persist(StorageLevel.MEMORY_AND_DISK)
-        # field=dir partitioning + term sort: a content-field lookup
-        # never touches the (much larger) file_name/file_path
-        # dictionaries, and prefix ranges prune row groups
-        try:
-            term_dict.repartitionByRange(
-                n_ranges, "field", "term"
-            ).sortWithinPartitions("term").write.mode("overwrite").partitionBy(
-                "field"
-            ).parquet(self.paths.term_dict)
-        finally:
-            term_dict.unpersist()
-        hints = hints_from_term_dict(
-            read_table(self.spark, "term_dict", self.paths.term_dict)
-        )
-        hints.coalesce(task_count(tok, 4)).write.mode("overwrite").parquet(
-            self.paths.hints
-        )
-        _atomic_write_json(
-            self.paths.finalized_marker,
-            {"status": "finalized", "n_groups": self.n_groups},
-        )
+        finalize_index(self.spark, self.paths, self._tokens(), self.n_groups)
 
     def is_finalized(self) -> bool:
         return os.path.exists(self.paths.finalized_marker)

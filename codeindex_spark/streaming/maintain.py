@@ -36,7 +36,7 @@ import dataclasses
 import functools
 import json
 import os
-from typing import Iterator
+import shutil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -49,12 +49,11 @@ from codeindex_spark.index.build import (
     default_num_buckets,
     prepare_docs,
 )
+from codeindex_spark.index.merge import merge_segments, merged_stats
 from codeindex_spark.index.segments import (
-    DOC_COLUMNS,
     IndexBuilder,
     IndexPaths,
     IndexReader,
-    _atomic_write_json,
     read_table,
 )
 
@@ -318,21 +317,13 @@ def _segment_stats(segs: list[dict]) -> list[pd.DataFrame]:
     return [pd.read_parquet(IndexPaths(s["dir"]).stats) for s in segs]
 
 
-def _merged_stats(seg_stats: list[pd.DataFrame]) -> pd.DataFrame:
-    g = (
-        pd.concat(seg_stats)
-        .groupby("field", as_index=False)
-        .agg(n_docs=("n_docs", "sum"), total_dl=("total_dl", "sum"))
-    )
-    g["avgdl"] = g["total_dl"] / g["n_docs"]
-    return g
-
-
 class IncrementalIndex:
     """Segment-stacked incremental index with tombstones.
 
     Layout under root/:
-        base/                — full IndexBuilder layout
+        base/                — full IndexBuilder layout (build_base)
+        base_g0002/ ...      — the base a compaction wrote, named by
+                               the generation that commits it
         deltas/d0001/ ...    — delta segments (same layout)
         tombstones.parquet   — doc_key rows excluded at query time,
                                epoch-tagged (the apply ordinal)
@@ -355,11 +346,18 @@ class IncrementalIndex:
         params: IndexParams = IndexParams(),
         n_groups: int = 1,
     ):
-        stored = os.path.join(root, "base", "params.json")
+        self.spark = spark
+        self.root = root
+        # the params pinned by an existing index: those of its first
+        # segment (a merge_compact base is not at root/base), else of a
+        # base build that has not committed _segments.json yet
+        segs = self.segments()
+        first = segs[0]["dir"] if segs else os.path.join(root, "base")
+        stored = os.path.join(first, "params.json")
         stored_d = json.load(open(stored)) if os.path.exists(stored) else None
         if params.num_buckets is None:
             # same resolution rule as IndexBuilder: adopt the bucket
-            # count pinned by an existing base segment (docIDs depend
+            # count pinned by an existing first segment (docIDs depend
             # on it), else the scale-adaptive default — resolved HERE
             # so every delta segment inherits one consistent value
             if stored_d is not None:
@@ -368,14 +366,12 @@ class IncrementalIndex:
                 nb = default_num_buckets(spark, n_groups)
             params = dataclasses.replace(params, num_buckets=nb)
         if stored_d is not None:
-            # the posting codec is likewise pinned by the base segment
+            # the posting codec is likewise pinned by the first segment
             # (every segment's byte streams must decode the same way);
             # a default-params reopen must never mix codecs
             params = dataclasses.replace(
                 params, codec=stored_d.get("codec", "varint")
             )
-        self.spark = spark
-        self.root = root
         self.params = params
         self.n_groups = n_groups
         os.makedirs(root, exist_ok=True)
@@ -576,12 +572,8 @@ class IncrementalIndex:
         if n_new:
             idx = len(segs)
             seg_dir = os.path.join(self.root, "deltas", f"d{idx:04d}")
-            params = IndexParams(
-                **{
-                    **self.params.to_dict(),
-                    "fields": tuple(self.params.fields),
-                    "base_doc_id": segs[-1]["end_doc"],
-                }
+            params = dataclasses.replace(
+                self.params, base_doc_id=segs[-1]["end_doc"]
             )
             IndexBuilder(self.spark, seg_dir, params, self.n_groups).build(
                 new_docs, resume=False
@@ -632,7 +624,7 @@ class IncrementalIndex:
         _merged_term_dict(self.spark, segs).write.mode("overwrite").partitionBy(
             "field"
         ).parquet(os.path.join(merged, "term_dict.parquet"))
-        _merged_stats(_segment_stats(segs)).to_parquet(
+        merged_stats(_segment_stats(segs)).to_parquet(
             os.path.join(merged, "stats.parquet"), index=False
         )
 
@@ -671,33 +663,29 @@ class IncrementalIndex:
     def compact(self) -> None:
         """Merge all segments + tombstones into a fresh base (the
         Lucene force-merge analog). Afterwards stats/df are exact."""
-        import shutil
-
+        segs = self.segments()
         live = self.live_docs().select(
             "repo", "path", "commit", "lang", "content"
         )
-        tmp_dir = os.path.join(self.root, "base_new")
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        IndexBuilder(self.spark, tmp_dir, self.params, self.n_groups).build(
+        base = self._next_base_dir()
+        IndexBuilder(self.spark, base, self.params, self.n_groups).build(
             live, resume=False
         )
-        # atomic-ish swap
-        old_base = os.path.join(self.root, "base")
-        shutil.rmtree(old_base, ignore_errors=True)
-        os.replace(tmp_dir, old_base)
-        shutil.rmtree(os.path.join(self.root, "deltas"), ignore_errors=True)
-        shutil.rmtree(self._tomb_dir, ignore_errors=True)
-        shutil.rmtree(self._removed_words_dir, ignore_errors=True)
-        self._restart_history("base", old_base, self._segment_end(old_base))
+        self._restart_history("base", base, self._segment_end(base))
+        self._drop_replaced(segs, base)
 
     def merge_compact(self) -> None:
-        """Postings-level compaction: drop tombstoned docs from the
-        stacked posting blocks by decode-filter-reencode — WITHOUT
-        re-tokenizing the corpus (the Lucene segment-merge analog:
-        segments rewrite, content is never re-analyzed). At 100 TB the
-        tokenize + (field, term, block) shuffle dominates a rebuild;
-        this pass touches only the posting bytes plus one JVM-side
-        token-COUNT pass over live docs for exact stats.
+        """Postings-level compaction: ``merge_segments`` over the
+        segment dirs with zero offsets (segments are doc-disjoint and
+        block-aligned already) and the tombstoned doc_ids as its dead
+        docs — WITHOUT re-tokenizing the corpus (the Lucene
+        segment-merge analog: segments rewrite, content is never
+        re-analyzed). Posting rows that lose a doc are decoded,
+        filtered and re-encoded; the rest keep their bytes and get a
+        block-max refresh. At 100 TB the tokenize + (field, term,
+        block) shuffle dominates a rebuild; this pass touches only the
+        posting bytes plus one JVM-side token-COUNT pass over the dead
+        docs for exact stats.
 
         Differences vs compact(): live doc_ids are PRESERVED (the doc
         space keeps holes where dead docs were), so the result is not
@@ -705,31 +693,19 @@ class IncrementalIndex:
         block-max metadata are recomputed exactly, so scores match a
         fresh build per document.
 
-        Scale shape: dead ids are grouped per doc-block (<= block_size
-        ids per group) and JOINED to posting rows on block_id — no
-        driver-side dead-id set, no broadcast of unbounded state."""
-        import shutil
+        Like compact(), it writes the new base to a fresh
+        ``_next_base_dir`` and removes the replaced segments only after
+        ``_segments.json`` names it."""
+        from codeindex_spark.index.build import _stats_from_sums, _tok_count_cols
 
-        from codeindex_spark.index import encoding
-        from codeindex_spark.index.build import (
-            POSTING_SCHEMA,
-            _stats_from_sums,
-            _tok_count_cols,
-            hints_from_term_dict,
-            term_dict_from_postings,
-        )
-
-        spark = self.spark
         segs = self.segments()
         if not segs:
             raise RuntimeError("build_base first")
-        bsz = self.params.block_size
-        k1, b_ = self.params.k1, self.params.b
-        codec = self.params.codec
-
-        live = self.live_docs()
-        dead_docs = self.all_docs().join(
-            live.select("doc_key"), "doc_key", "left_anti"
+        tomb = self._tombstones(None)
+        dead_docs = (
+            None
+            if tomb is None
+            else self.all_docs().join(tomb, "doc_key", "left_semi")
         )
 
         # only the token-count columns this index's fields actually
@@ -764,226 +740,48 @@ class IncrementalIndex:
         # the dead docs (a scan over churn, not corpus). Integer
         # arithmetic then the same total/n division a fresh build
         # does → bit-identical avgdl → identical scores. Falls back
-        # to the full live token-count pass on any stats-shape
-        # surprise (e.g. a pre-total_dl segment).
-        stats = None
-        try:
-            seg_stats = pd.concat(_segment_stats(segs), ignore_index=True)
-            sums = _exact_live_sums(seg_stats, _sum_agg(dead_docs), needed)
-            if sums is not None:
-                stats = _stats_from_sums(sums, tuple(self.params.fields))
-        except Exception:
-            stats = None
-        if stats is None:
-            stats = _stats_from_sums(
-                _sum_agg(live), tuple(self.params.fields)
-            )
-        avgdl_map = {r.field: float(r.avgdl) for r in stats.itertuples()}
-
-        dead = dead_docs.select("doc_id").withColumn(
-            "block_id", (F.col("doc_id") / bsz).cast("long")
+        # to the full live token-count pass when the stats shape
+        # cannot be reconstructed (e.g. a pre-total_dl segment).
+        sums = _exact_live_sums(
+            pd.concat(_segment_stats(segs), ignore_index=True),
+            {"n_docs": 0} if dead_docs is None else _sum_agg(dead_docs),
+            needed,
         )
-        dead_by_block = dead.groupBy("block_id").agg(
-            F.collect_list("doc_id").alias("deadids")
+        if sums is None:
+            sums = _sum_agg(self.live_docs())
+        merged_dir = self._next_base_dir()
+        merge_segments(
+            self.spark,
+            [s["dir"] for s in segs],
+            [0] * len(segs),
+            _stats_from_sums(sums, tuple(self.params.fields)),
+            merged_dir,
+            dead=None if dead_docs is None else dead_docs.select("doc_id"),
         )
-        posts = self.reader().postings.select(
-            [f.name for f in POSTING_SCHEMA.fields]
+        self._restart_history("merged", merged_dir, segs[-1]["end_doc"])
+        self._drop_replaced(segs, merged_dir)
+
+    def _next_base_dir(self) -> str:
+        """An empty dir for a compaction's output, named by the
+        generation that will commit it (``base_gNNNN``): no current
+        segment uses it, so the replaced segments stay readable until
+        ``_segments.json`` names the new one."""
+        path = os.path.join(
+            self.root, f"base_g{self._state()['generation'] + 1:04d}"
         )
-        joined = posts.join(dead_by_block, "block_id", "left")
+        shutil.rmtree(path, ignore_errors=True)
+        return path
 
-        post_cols = [f.name for f in POSTING_SCHEMA.fields]
-
-        def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            """Two-path vectorized rewrite. The posting byte streams
-            (docs/tfs/dls/positions) are avgdl-INDEPENDENT; only the
-            one block_max_tfnorm double per row depends on the new
-            stats. So rows whose posting list holds no dead doc — the
-            overwhelming majority at low churn, since a dead doc
-            touches only rows of terms it contains — pass their bytes
-            straight through and get a metadata-only refresh (decode
-            of the two small tf/dl streams; positions, the byte bulk,
-            are never decoded or re-encoded). Only rows that actually
-            lose an entry take the full decode-filter-reencode path.
-            All decoding stays batched per Arrow chunk (the builder's
-            lesson: per-group Python calls were 35x slower)."""
-            import numpy as np
-
-            def refresh(pdf: pd.DataFrame) -> pd.DataFrame:
-                n_arr = pdf["n"].to_numpy(dtype=np.int64)
-                tfs = encoding.decode_rows_values(
-                    [bytes(x) for x in pdf["tfs"]], n_arr, codec
-                )
-                dls = encoding.decode_rows_values(
-                    [bytes(x) for x in pdf["dls"]], n_arr, codec
-                )
-                # same expression (op order included) as
-                # encoding.bm25_tfnorm, with per-entry avgdl
-                avg = np.repeat(
-                    np.array(
-                        [avgdl_map[f] for f in pdf["field"]],
-                        dtype=np.float64,
-                    ),
-                    n_arr,
-                )
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                tfn = tf * (k1 + 1.0) / (
-                    tf + k1 * (1.0 - b_ + b_ * dl / avg)
-                )
-                starts = np.zeros(n_arr.size, dtype=np.int64)
-                np.cumsum(n_arr[:-1], out=starts[1:])
-                return pdf.assign(
-                    block_max_tfnorm=np.maximum.reduceat(tfn, starts)
-                )[post_cols]
-
-            def reencode(pdf: pd.DataFrame) -> pd.DataFrame:
-                # encode_blocks_batch requires (field, term, block_id)
-                # grouped order; rows are unique per group
-                pdf = pdf.sort_values(
-                    ["field", "term", "block_id"], kind="mergesort"
-                )
-                n_arr = pdf["n"].to_numpy(dtype=np.int64)
-                block_ids = pdf["block_id"].to_numpy(dtype=np.int64)
-                docs = encoding.decode_rows_docs(
-                    [bytes(x) for x in pdf["docs_delta"]],
-                    n_arr,
-                    block_ids,
-                    bsz,
-                    codec,
-                )
-                tfs = encoding.decode_rows_values(
-                    [bytes(x) for x in pdf["tfs"]], n_arr, codec
-                )
-                dls = encoding.decode_rows_values(
-                    [bytes(x) for x in pdf["dls"]], n_arr, codec
-                )
-                pcounts, flat_pos = encoding.decode_positions_rows(
-                    [bytes(x) for x in pdf["pos_counts"]],
-                    [bytes(x) for x in pdf["pos_deltas"]],
-                    n_arr,
-                    codec,
-                )
-                total = int(n_arr.sum())
-                assert pcounts.size == total, "positions/entries mismatch"
-                field_rep = np.repeat(pdf["field"].to_numpy(), n_arr)
-                term_rep = np.repeat(pdf["term"].to_numpy(), n_arr)
-                block_rep = np.repeat(block_ids, n_arr)
-                dead_arr = np.unique(
-                    np.concatenate(
-                        [
-                            np.asarray(d, dtype=np.int64)
-                            for d in pdf["deadids"]
-                        ]
-                    )
-                )
-                keep = ~np.isin(docs, dead_arr)
-                if not keep.any():
-                    return pd.DataFrame(columns=post_cols)
-                pos_slices = np.split(flat_pos, np.cumsum(pcounts)[:-1])
-                kept_idx = np.flatnonzero(keep)
-                positions = [pos_slices[i] for i in kept_idx]
-                cols = encoding.encode_blocks_batch(
-                    field_rep[kept_idx],
-                    term_rep[kept_idx],
-                    block_rep[kept_idx],
-                    docs[kept_idx],
-                    tfs[kept_idx],
-                    dls[kept_idx],
-                    positions,
-                    avgdl_map,
-                    k1,
-                    b_,
-                    bsz,
-                    codec,
-                )
-                return pd.DataFrame(cols)
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                has_dead = pdf["deadids"].notna().to_numpy()
-                out: list[pd.DataFrame] = []
-                clean = pdf.loc[~has_dead]
-                cand = pdf.loc[has_dead]
-                touched = None
-                if len(cand):
-                    # doc_ids are globally unique and block-disjoint,
-                    # so one batch-wide membership test is exact
-                    n_arr = cand["n"].to_numpy(dtype=np.int64)
-                    block_ids = cand["block_id"].to_numpy(dtype=np.int64)
-                    docs = encoding.decode_rows_docs(
-                        [bytes(x) for x in cand["docs_delta"]],
-                        n_arr,
-                        block_ids,
-                        bsz,
-                        codec,
-                    )
-                    dead_arr = np.unique(
-                        np.concatenate(
-                            [
-                                np.asarray(d, dtype=np.int64)
-                                for d in cand["deadids"]
-                            ]
-                        )
-                    )
-                    kill = np.isin(docs, dead_arr)
-                    row_rep = np.repeat(
-                        np.arange(len(cand), dtype=np.int64), n_arr
-                    )
-                    row_kill = np.zeros(len(cand), dtype=bool)
-                    row_kill[row_rep[kill]] = True
-                    touched = cand.loc[row_kill]
-                    clean = pd.concat([clean, cand.loc[~row_kill]])
-                if len(clean):
-                    out.append(refresh(clean))
-                if touched is not None and len(touched):
-                    out.append(reencode(touched))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        merged_dir = os.path.join(self.root, "base_merged")
-        shutil.rmtree(merged_dir, ignore_errors=True)
-        mp = IndexPaths(merged_dir)
-        new_posts = joined.mapInPandas(rewrite, schema=POSTING_SCHEMA)
-        par = max(spark.sparkContext.defaultParallelism, 4)
-        (
-            new_posts.repartitionByRange(par, "field", "term", "block_id")
-            .sortWithinPartitions("field", "term", "block_id")
-            .write.mode("overwrite")
-            .partitionBy("field")
-            .parquet(os.path.join(mp.postings, "group=0"))
-        )
-        # the tombstone anti-join put doc_key first: write the docs
-        # table's own column order
-        live.select(*DOC_COLUMNS, "group").write.mode("overwrite").partitionBy(
-            "group"
-        ).parquet(mp.docs)
-        stats.to_parquet(mp.stats, index=False)
-        _atomic_write_json(mp.params, self.params.to_dict())
-        # offsets are a planning artifact of the original base; the
-        # merged segment keeps the SAME doc space, so carry them over
-        pd.read_parquet(IndexPaths(segs[0]["dir"]).offsets).to_parquet(
-            mp.offsets, index=False
-        )
-        td = term_dict_from_postings(read_table(spark, "postings", mp.postings))
-        (
-            td.repartitionByRange(max(par // 2, 2), "field", "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("field")
-            .parquet(mp.term_dict)
-        )
-        hints_from_term_dict(read_table(spark, "term_dict", mp.term_dict)).coalesce(
-            4
-        ).write.mode("overwrite").parquet(mp.hints)
-
-        end_doc = segs[-1]["end_doc"]
+    def _drop_replaced(self, segs: list[dict], keep: str) -> None:
+        """After a compaction committed ``keep`` as the only segment:
+        remove the replaced segment dirs and the tombstone and
+        removed-word logs."""
         for s in segs:
-            if os.path.abspath(s["dir"]) != os.path.abspath(merged_dir):
+            if os.path.abspath(s["dir"]) != os.path.abspath(keep):
                 shutil.rmtree(s["dir"], ignore_errors=True)
+        shutil.rmtree(os.path.join(self.root, "deltas"), ignore_errors=True)
         shutil.rmtree(self._tomb_dir, ignore_errors=True)
         shutil.rmtree(self._removed_words_dir, ignore_errors=True)
-        self._restart_history("merged", merged_dir, end_doc)
 
 
 def _held(open_frame):
@@ -1137,13 +935,9 @@ class MultiReader:
 
     @_held
     def stats(self) -> pd.DataFrame:
-        return _merged_stats(self._seg_stats)
+        return merged_stats(self._seg_stats)
 
-    def field_stats(self, field: str) -> tuple[int, float]:
-        row = self.stats[self.stats["field"] == field]
-        if row.empty:
-            raise KeyError(f"no stats for field {field!r}")
-        return int(row["n_docs"].iloc[0]), float(row["avgdl"].iloc[0])
+    field_stats = IndexReader.field_stats
 
     def live_doc_ids(self) -> DataFrame | None:
         """doc_id of the held live docs; None when there are no

@@ -422,29 +422,9 @@ def test_hint_word_removed_with_last_doc(spark, tmp_path):
     assert "content" not in words2  # no live doc has it anymore
 
 
-def test_merge_compact_equals_fresh_scores(spark, tmp_path, versions):
-    """Postings-level compaction (decode-filter-reencode, NO
-    re-tokenization) produces exactly the scores of a fresh build per
-    document: live doc_ids keep their holes, but BM25 stats, df/cf,
-    and block-max metadata are recomputed from live docs only."""
-    v1, v2, deleted_path = versions
-    root = str(tmp_path / "mc")
-    inc = IncrementalIndex(spark, root, PARAMS, n_groups=1)
-    inc.build_base(spark.createDataFrame(v1))
-    inc.apply_snapshot(spark.createDataFrame(v2))
-    inc.merge_compact()
-    assert len(inc.segments()) == 1
-    assert not os.path.exists(inc._tomb_dir)
-
-    from codeindex_spark.index.segments import IndexBuilder
-
-    fresh_dir = str(tmp_path / "mc_fresh")
-    IndexBuilder(spark, fresh_dir, PARAMS, n_groups=1).build(
-        spark.createDataFrame(v2), resume=False
-    )
-    eng_m = SearchEngine(inc.reader())
-    eng_f = SearchEngine(IndexReader(spark, fresh_dir))
-    for q in ("get", "string OR return NOT get", "uniquenewterm"):
+def _assert_scores_equal(eng_m, eng_f, queries):
+    """Every query matches the same paths with the same scores."""
+    for q in queries:
         got = {
             r["path"]: r["score"]
             for r in eng_m.search(q, k=200, with_docs=True).collect()
@@ -456,6 +436,43 @@ def test_merge_compact_equals_fresh_scores(spark, tmp_path, versions):
         assert got.keys() == exp.keys(), q
         for p in exp:
             assert got[p] == pytest.approx(exp[p], rel=1e-12), (q, p)
+
+
+def _fresh_engine(spark, index_dir, pdf):
+    from codeindex_spark.index.segments import IndexBuilder
+
+    IndexBuilder(spark, index_dir, PARAMS, n_groups=1).build(
+        spark.createDataFrame(pdf), resume=False
+    )
+    return SearchEngine(IndexReader(spark, index_dir))
+
+
+def test_merge_compact_equals_fresh_scores(spark, tmp_path, versions):
+    """Postings-level compaction (decode-filter-reencode, NO
+    re-tokenization) produces exactly the scores of a fresh build per
+    document: live doc_ids keep their holes, but BM25 stats, df/cf,
+    and block-max metadata are recomputed from live docs only. The
+    merged segment is a finalized index that passes CheckIndex."""
+    from codeindex_spark.index.check import check_index
+
+    v1, v2, deleted_path = versions
+    root = str(tmp_path / "mc")
+    inc = IncrementalIndex(spark, root, PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    inc.merge_compact()
+    assert len(inc.segments()) == 1
+    assert not os.path.exists(inc._tomb_dir)
+    merged = IndexReader(spark, inc.segments()[0]["dir"])
+    assert os.path.exists(merged.paths.finalized_marker)
+    checks = check_index(merged).collect()
+    assert checks and all(r["n_violations"] == 0 for r in checks), checks
+
+    eng_m = SearchEngine(inc.reader())
+    eng_f = _fresh_engine(spark, str(tmp_path / "mc_fresh"), v2)
+    _assert_scores_equal(
+        eng_m, eng_f, ("get", "string OR return NOT get", "uniquenewterm")
+    )
     # deleted doc is gone; hints match the fresh build's
     assert eng_m.search("get", k=500, with_docs=True).filter(
         F.col("path") == deleted_path
@@ -475,6 +492,59 @@ def test_merge_compact_equals_fresh_scores(spark, tmp_path, versions):
         (r["doc_id"], r["score"]) for r in eng_m.search(wq, k=20).collect()
     ]
     assert wand == exact
+
+
+def test_merge_compact_twice_keeps_only_live_segment(spark, tmp_path, versions):
+    """A second merge_compact reads the first one's output: it must
+    write a new segment dir rather than overwrite its own source, and
+    leave only the live segment on disk. compact() afterwards removes
+    the merged base too."""
+    v1, v2, _ = versions
+    v3 = v2.drop(index=3).reset_index(drop=True)
+    v3.loc[5, "content"] = "second round secondroundterm content"
+    v3.loc[5, "commit"] = "csecondround05"
+    root = str(tmp_path / "mc2")
+    inc = IncrementalIndex(spark, root, PARAMS, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    inc.merge_compact()
+    inc.apply_snapshot(spark.createDataFrame(v3))
+    inc.merge_compact()
+    segs = inc.segments()
+    assert len(segs) == 1
+    seg_name = os.path.basename(segs[0]["dir"])
+    assert sorted(os.listdir(root)) == ["_segments.json", seg_name, "merged"]
+    _assert_scores_equal(
+        SearchEngine(inc.reader()),
+        _fresh_engine(spark, str(tmp_path / "mc2_fresh"), v3),
+        ("get", "string OR return NOT get", "uniquenewterm", "secondroundterm"),
+    )
+    inc.compact()
+    seg_name = os.path.basename(inc.segments()[0]["dir"])
+    assert sorted(os.listdir(root)) == ["_segments.json", seg_name, "merged"]
+
+
+def test_reopen_after_merge_compact_keeps_pinned_params(
+    spark, tmp_path, versions
+):
+    """merge_compact replaces root/base, so a reopen takes the pinned
+    bucket count and codec from the first listed segment: the next
+    apply then builds a delta the stacked reader decodes like the
+    merged base."""
+    v1, v2, _ = versions
+    root = str(tmp_path / "mcpin")
+    pinned = IndexParams(num_buckets=12, block_size=32, codec="forpack")
+    inc = IncrementalIndex(spark, root, pinned, n_groups=1)
+    inc.build_base(spark.createDataFrame(v1))
+    inc.merge_compact()
+    reopened = IncrementalIndex(
+        spark, root, IndexParams(block_size=32), n_groups=1
+    )
+    assert reopened.params.num_buckets == 12
+    assert reopened.params.codec == "forpack"
+    reopened.apply_snapshot(spark.createDataFrame(v2))
+    hits = SearchEngine(reopened.reader()).search("uniquenewterm", k=10).collect()
+    assert len(hits) == 1 and hits[0]["score"] > 0
 
 
 def test_declared_schemas_match_written_tables(spark, tmp_path, versions):
