@@ -30,6 +30,7 @@ expansion semantics in DuckDB.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import sys
@@ -44,6 +45,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _ENGINES: dict[str, object] = {}
+
+
+# the sources that decide what an engine index holds on disk
+_WRITER_SOURCES = (
+    "index/build.py",
+    "index/segments.py",
+    "index/encoding.py",
+    "index/docids.py",
+    "index/merge.py",
+    "streaming/maintain.py",
+    "tokenizer.py",
+)
+
+
+@functools.cache
+def _writer_digest() -> str:
+    h = hashlib.sha256()
+    for rel in _WRITER_SOURCES:
+        h.update(rel.encode())
+        with open(os.path.join(REPO_ROOT, "codeindex_spark", rel), "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
+def _index_cache_dir(key: str, sf_dir: str, prefix: str = "") -> str:
+    """Cache dir of the engine index ``key`` built over ``sf_dir``,
+    keyed by a digest of the index writer sources: an index written
+    by other writer code is rebuilt rather than served."""
+    tag = hashlib.sha256(key.encode()).hexdigest()[:12]
+    name = os.path.basename(os.path.abspath(sf_dir))
+    return f"/tmp/codeindex_entry/{prefix}{name}_{tag}_{_writer_digest()}"
 
 
 def _ensure_pkg(spark: SparkSession) -> None:
@@ -121,9 +153,7 @@ def _engine(spark: SparkSession, sf_dir: str):
     from codeindex_spark.index.segments import IndexBuilder, IndexReader
     from codeindex_spark.query.planner import SearchEngine
 
-    # v3: content_trigram field added — new dir so stale caches rebuild
-    tag = hashlib.sha256(key.encode()).hexdigest()[:12]
-    idx_dir = f"/tmp/codeindex_entry/{os.path.basename(key)}_{tag}_v3"
+    idx_dir = _index_cache_dir(key, sf_dir)
     params = IndexParams(
         num_buckets=16, block_size=128, fields=CONTENT_TRIGRAM_FIELDS
     )
@@ -154,8 +184,7 @@ def _engine_forpack(spark: SparkSession, sf_dir: str):
     from codeindex_spark.index.segments import IndexBuilder, IndexReader
     from codeindex_spark.query.planner import SearchEngine
 
-    tag = hashlib.sha256(key.encode()).hexdigest()[:12]
-    idx_dir = f"/tmp/codeindex_entry/{os.path.basename(os.path.abspath(sf_dir))}_{tag}_fp1"
+    idx_dir = _index_cache_dir(key, sf_dir)
     params = IndexParams(
         num_buckets=16,
         block_size=128,
@@ -196,8 +225,7 @@ def _engine_merged(spark: SparkSession, sf_dir: str):
     from codeindex_spark.index.segments import IndexBuilder, IndexReader
     from codeindex_spark.query.planner import SearchEngine
 
-    tag = hashlib.sha256(key.encode()).hexdigest()[:12]
-    base = f"/tmp/codeindex_entry/{os.path.basename(os.path.abspath(sf_dir))}_{tag}_mg2"
+    base = _index_cache_dir(key, sf_dir)
     merged_dir = os.path.join(base, "m")
     if not os.path.exists(
         os.path.join(merged_dir, "manifest", "_finalized.json")
@@ -2740,11 +2768,7 @@ def _tt_index(spark, sf_dir):
     from codeindex_spark.index.build import IndexParams
     from codeindex_spark.streaming.maintain import IncrementalIndex
 
-    tag = hashlib.sha256(key.encode()).hexdigest()[:12]
-    root = (
-        f"/tmp/codeindex_entry/tt_{os.path.basename(os.path.abspath(sf_dir))}"
-        f"_{tag}_v1"
-    )
+    root = _index_cache_dir(key, sf_dir, prefix="tt_")
     params = IndexParams(num_buckets=16, block_size=128)
     inc = IncrementalIndex(spark, root, params, n_groups=1)
     if inc.n_applies() != 2 or len(inc.segments()) != 2:

@@ -30,8 +30,8 @@ One ``mapInPandas`` pass rewrites the posting rows:
   that actually lose a doc are decoded, filtered and re-encoded.
 
 The docs table drops the dead docs with one anti-join. The postings
-are written range-partitioned like a build's, and the dictionary,
-hints and ``manifest/_finalized.json`` come from the same
+are written range-partitioned like a build's, and the dictionary
+and ``manifest/_finalized.json`` come from the same
 ``segments.finalize_index`` a build ends with: the dictionary is
 summed from the written postings, so df/cf count live docs only.
 

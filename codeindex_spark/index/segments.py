@@ -10,8 +10,12 @@ Layout under ``index_dir/``:
     manifest/group_G.json       — per-group commit record with lineage
                                   (sha checksum) + metrics (files/sec)
     term_dict.parquet           — global term dictionary (finalize)
-    hints.parquet               — hint words (finalize)
     manifest/_finalized.json
+
+Hint words are not a table: ``IndexReader.hints`` filters the
+dictionary's ``content_cs`` slice (``hints_from_term_dict``). An index
+written when finalize still wrote ``hints.parquet`` reads the same
+hints; the leftover file is ignored.
 
 Resume semantics mirror the reference's initialize-reconcile
 (/root/reference/src/CodeIndex.MaintainIndex/IndexMaintainer.cs:272-369):
@@ -29,8 +33,8 @@ an independent Spark job over ~1/G of the corpus.
 
 Step sizes come from the plan. One rule (``task_count``) gives every
 split/partition count of a build: the tokenize input split, the
-(field, term, block_id) posting shuffle, the posting and dictionary
-range exchanges and the hints coalesce. It asks for one task per
+(field, term, block_id) posting shuffle and the posting and
+dictionary range exchanges. It asks for one task per
 ``TOKENS_PER_TASK`` tokens of the step's input, capped at the fixed
 count each step used before (so a large build keeps that shape). The
 token count is read from the plan's artifacts — ``stats.parquet``
@@ -41,8 +45,8 @@ takes no sample, and the encoded blocks are cached only when a
 sampler would otherwise re-run the encode.
 
 Engine tables are opened with declared schemas (``TABLE_SCHEMAS``,
-``read_table``): ``docs``, ``postings``, ``term_dict``, ``hints`` and
-the incremental index's ``tombstones`` and ``removed_words``. A read
+``read_table``): ``docs``, ``postings``, ``term_dict`` and the
+incremental index's ``tombstones``. A read
 then lists files but runs no footer-inference job. The declared
 schema must match what the writers produce, partition columns last in
 directory order: a column added to a table's writer must be added to
@@ -116,13 +120,9 @@ TABLE_SCHEMAS = {
     "term_dict": _schema(
         [("term", _STR), ("df", _LONG), ("cf", _LONG), ("field", _STR)]
     ),
-    "hints": _schema([("word", _STR), ("word_lower", _STR)]),
     # incremental index (streaming/maintain.py); files written before
     # epochs existed lack the column, which then reads as NULL
     "tombstones": _schema([("doc_key", _STR), ("epoch", _INT)]),
-    "removed_words": _schema(
-        [("word", _STR), ("removed", _LONG), ("epoch", _INT)]
-    ),
 }
 
 
@@ -192,9 +192,9 @@ def finalize_index(
     spark: SparkSession, paths: IndexPaths, tokens: float, n_groups: int
 ) -> None:
     """The tail of every index writer (a build, a merge): the term
-    dictionary summed from the WRITTEN postings, the hints derived
-    from it and the ``_finalized.json`` marker. Step sizes come from
-    ``task_count`` over the index's ``tokens``."""
+    dictionary summed from the WRITTEN postings and the
+    ``_finalized.json`` marker. Step sizes come from ``task_count``
+    over the index's ``tokens``."""
     n_ranges = task_count(
         tokens, max(spark.sparkContext.defaultParallelism // 2, 2)
     )
@@ -219,10 +219,6 @@ def finalize_index(
         ).parquet(paths.term_dict)
     finally:
         term_dict.unpersist()
-    hints = hints_from_term_dict(read_table(spark, "term_dict", paths.term_dict))
-    hints.coalesce(task_count(tokens, 4)).write.mode("overwrite").parquet(
-        paths.hints
-    )
     _atomic_write_json(
         paths.finalized_marker, {"status": "finalized", "n_groups": n_groups}
     )
@@ -259,10 +255,6 @@ class IndexPaths:
     @property
     def term_dict(self) -> str:
         return os.path.join(self.root, "term_dict.parquet")
-
-    @property
-    def hints(self) -> str:
-        return os.path.join(self.root, "hints.parquet")
 
     def group_manifest(self, g: int) -> str:
         return os.path.join(self.manifest_dir, f"group_{g}.json")
@@ -469,7 +461,6 @@ class IndexBuilder:
                 self.paths.postings,
                 self.paths.manifest_dir,
                 self.paths.term_dict,
-                self.paths.hints,
             ):
                 shutil.rmtree(sub, ignore_errors=True)
             for f in (self.paths.params, self.paths.offsets, self.paths.stats):
@@ -508,9 +499,10 @@ class IndexReader:
     directory.
 
     ``params`` is read at open; each table frame (``docs``,
-    ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
-    first access, with its declared schema, and then held, so a query
-    does not re-list files per access. The held frames keep the file
+    ``postings``, ``term_dict``) and ``stats`` is opened on first
+    access, with its declared schema, and then held, so a query does
+    not re-list files per access; ``hints`` filters the held
+    dictionary. The held frames keep the file
     listing they were opened with: reopen the reader
     after rebuilding or compacting its directory."""
 
@@ -533,7 +525,7 @@ class IndexReader:
 
     @functools.cached_property
     def hints(self) -> DataFrame:
-        return read_table(self.spark, "hints", self.paths.hints)
+        return hints_from_term_dict(self.term_dict)
 
     @functools.cached_property
     def stats(self) -> pd.DataFrame:

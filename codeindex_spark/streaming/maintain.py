@@ -39,7 +39,7 @@ import os
 import shutil
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,6 +48,7 @@ from codeindex_spark.index.build import (
     IndexParams,
     default_num_buckets,
     prepare_docs,
+    token_rows,
 )
 from codeindex_spark.index.merge import merge_segments, merged_stats
 from codeindex_spark.index.segments import (
@@ -292,9 +293,9 @@ def _read_segments(spark: SparkSession, segs: list[dict], table: str) -> DataFra
 
 
 def _up_to(frame: DataFrame, as_of: int | None) -> DataFrame:
-    """Rows of an epoch-tagged log (tombstones, removed words) visible
-    at ``as_of``. Rows written before epochs existed read ``epoch`` as
-    NULL and stay visible at every epoch."""
+    """Rows of the epoch-tagged tombstone log visible at ``as_of``.
+    Rows written before epochs existed read ``epoch`` as NULL and stay
+    visible at every epoch."""
     if as_of is None:
         return frame
     return frame.filter(F.coalesce(F.col("epoch"), F.lit(0)) <= as_of)
@@ -327,15 +328,15 @@ class IncrementalIndex:
         deltas/d0001/ ...    — delta segments (same layout)
         tombstones.parquet   — doc_key rows excluded at query time,
                                epoch-tagged (the apply ordinal)
-        merged/term_dict.parquet, merged/stats.parquet
+        merged/term_dict.parquet — the segments' dictionaries summed
         _segments.json       — ordered segment list + doc-space ends
                                + epochs + the n_applies counter + the
                                generation (bumped when history restarts)
 
     Epochs give Iceberg-style snapshot time travel: ``reader(as_of=k)``
     serves queries against the exact state after the k-th apply
-    (segments with epoch <= k, tombstones/removed-words with epoch
-    <= k, prefix-merged stats/dictionary). compact()/merge_compact()
+    (segments with epoch <= k, tombstones with epoch <= k,
+    prefix-merged stats/dictionary). compact()/merge_compact()
     expire history, like Iceberg's expire_snapshots.
     """
 
@@ -387,8 +388,8 @@ class IncrementalIndex:
         return os.path.join(self.root, "tombstones.parquet")
 
     @property
-    def _removed_words_dir(self) -> str:
-        return os.path.join(self.root, "removed_words.parquet")
+    def _merged_term_dict_dir(self) -> str:
+        return os.path.join(self.root, "merged", "term_dict.parquet")
 
     def _state(self) -> dict:
         """The parsed ``_segments.json``: ``segments``, ``n_applies``
@@ -457,55 +458,59 @@ class IncrementalIndex:
 
     def apply_snapshot(self, snapshot: DataFrame) -> dict:
         """ST6+ST5: reconcile the new snapshot against live docs, then
-        upsert via a delta segment + tombstones."""
+        upsert via a delta segment + tombstones. Returns the number of
+        rows per reconcile action (actions with no row left out)."""
         live = self.live_docs().select(
             "repo", "path", "doc_key", "content_sha256"
         )
-        rec = reconcile(live, snapshot).cache()
         # doc identity is (repo, path, commit): an update MUST carry a
         # new commit, else its doc_key collides with the tombstoned old
-        # version and the new row would be filtered out too. One
-        # aggregate job returns the per-action counts and the stale
-        # updates together.
+        # version and the new row would be filtered out too.
         new_doc_key = F.sha2(
             F.concat_ws("\x1f", F.col("repo"), F.col("path"), F.col("commit")),
             256,
         )
-        rows = (
-            rec.groupBy("action")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
+        action = F.col("action")
+        obs = Observation("reconcile")
+        # The per-action counts and the stale updates are observed
+        # while the one checkpoint job runs, and the O(delta) changed
+        # rows are held apart from the tombstones they were reconciled
+        # against: the tombstone append would otherwise make the delta
+        # build re-run the whole reconcile. Nothing is cached, so AQE
+        # sizes the checkpointed rows to the delta.
+        delta = (
+            reconcile(live, snapshot)
+            .observe(
+                obs,
+                *[
+                    F.count(F.when(action == a, True)).alias(a)
+                    for a in ("add", "update", "delete", "unchanged")
+                ],
                 F.count(
                     F.when(
-                        (F.col("action") == "update")
+                        (action == "update")
                         & (new_doc_key == F.col("old_doc_key")),
                         True,
                     )
                 ).alias("stale"),
             )
-            .collect()
+            .filter(action != "unchanged")
+            .localCheckpoint()
         )
-        counts = {r["action"]: r["n"] for r in rows}
-        stale = sum(r["stale"] for r in rows)
+        counts = {a: n for a, n in obs.get.items() if n}
+        stale = counts.pop("stale", 0)
         if stale:
-            rec.unpersist()
             raise ValueError(
                 f"{stale} updated rows kept their commit unchanged; "
                 "updates must carry a new commit (doc identity is "
                 "(repo, path, commit))"
             )
-        # Hold the O(delta) changed rows apart from the tombstones they
-        # were reconciled against: appending to the tombstones makes
-        # Spark refresh every cached plan that reads them, and the
-        # delta build would then re-run the whole reconcile.
-        delta = rec.filter(F.col("action") != "unchanged").localCheckpoint()
-        rec.unpersist()
-        changed = delta.filter(F.col("action").isin("add", "update")).select(
+        changed = delta.filter(action.isin("add", "update")).select(
             "repo", "path", "commit", "lang", "content"
         )
         # the old keys are live docs' keys: unique and never
         # tombstoned, so no distinct() or tombstone anti-join
-        dead_keys = delta.filter(F.col("action").isin("update", "delete")).select(
+        dead_keys = delta.filter(action.isin("update", "delete")).select(
             F.col("old_doc_key").alias("doc_key")
         )
         self._apply(
@@ -526,8 +531,7 @@ class IncrementalIndex:
         if dead is not None:
             dead = dead.select("doc_key").distinct()
             if os.path.exists(self._tomb_dir):
-                # idempotence: never double-tombstone (would also
-                # double-count removed hint words)
+                # idempotence: the log holds each key once
                 dead = dead.join(
                     read_table(self.spark, "tombstones", self._tomb_dir),
                     "doc_key",
@@ -565,7 +569,6 @@ class IncrementalIndex:
             raise RuntimeError("build_base first")
         epoch = state["n_applies"] + 1
         if n_dead:
-            self._record_removed_words(dead, epoch)
             dead.withColumn("epoch", F.lit(epoch)).write.mode(
                 "append"
             ).parquet(self._tomb_dir)
@@ -591,42 +594,12 @@ class IncrementalIndex:
         )
         self._merge_metadata()
 
-    def _record_removed_words(
-        self, dead_keys: DataFrame, epoch: int
-    ) -> None:
-        """Incremental hint-word maintenance (reference deletes a hint
-        word when its last live doc goes away — the Exists-before-
-        delete semi-join, CodeIndexBuilder.cs:369-375,446-452).
-        Tokenizes ONLY the docs being tombstoned (bounded by the
-        change batch, never the corpus) and appends their per-word
-        doc counts; hints() subtracts these from the merged
-        dictionary's df, so a word with no live doc stops serving as
-        a hint immediately instead of waiting for compact()."""
-        from codeindex_spark.index.build import token_rows
-
-        dead_docs = self.all_docs().join(dead_keys, "doc_key", "left_semi")
-        words = (
-            token_rows(dead_docs, fields=("content_cs",))
-            .filter((F.length("term") >= 4) & (F.length("term") <= 199))
-            .groupBy(F.col("term").alias("word"))
-            .agg(F.count("*").alias("removed"))
-        )
-        words.withColumn("epoch", F.lit(epoch)).write.mode("append").parquet(
-            self._removed_words_dir
-        )
-
     # ---------- merged metadata ----------
 
     def _merge_metadata(self) -> None:
-        merged = os.path.join(self.root, "merged")
-        os.makedirs(merged, exist_ok=True)
-        segs = self.segments()
-        _merged_term_dict(self.spark, segs).write.mode("overwrite").partitionBy(
-            "field"
-        ).parquet(os.path.join(merged, "term_dict.parquet"))
-        merged_stats(_segment_stats(segs)).to_parquet(
-            os.path.join(merged, "stats.parquet"), index=False
-        )
+        _merged_term_dict(self.spark, self.segments()).write.mode(
+            "overwrite"
+        ).partitionBy("field").parquet(self._merged_term_dict_dir)
 
     # ---------- read ----------
 
@@ -774,14 +747,12 @@ class IncrementalIndex:
 
     def _drop_replaced(self, segs: list[dict], keep: str) -> None:
         """After a compaction committed ``keep`` as the only segment:
-        remove the replaced segment dirs and the tombstone and
-        removed-word logs."""
+        remove the replaced segment dirs and the tombstone log."""
         for s in segs:
             if os.path.abspath(s["dir"]) != os.path.abspath(keep):
                 shutil.rmtree(s["dir"], ignore_errors=True)
         shutil.rmtree(os.path.join(self.root, "deltas"), ignore_errors=True)
         shutil.rmtree(self._tomb_dir, ignore_errors=True)
-        shutil.rmtree(self._removed_words_dir, ignore_errors=True)
 
 
 def _held(open_frame):
@@ -807,8 +778,8 @@ class MultiReader:
 
     The segment list is pinned at open; each table frame (``docs``,
     ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
-    first access, with its declared schema, and then held, so a query
-    does not re-list files per access. The held frames keep the file
+    first access, with its declared schema where it reads a table,
+    and then held, so a query does not re-list files per access. The held frames keep the file
     listing they were opened with: reopen the reader
     after apply_*(), compact() or merge_compact(). Every access checks
     ``_segments.json`` (no Spark job): a latest-view reader raises
@@ -851,12 +822,14 @@ class MultiReader:
     def _seg_stats(self) -> list[pd.DataFrame]:
         return _segment_stats(self._segs)
 
+    @functools.cached_property
+    def _all_docs(self) -> DataFrame:
+        return _read_segments(self.spark, self._segs, "docs")
+
     @_held
     def docs(self) -> DataFrame:
         """The live docs: the segments' docs minus the tombstones."""
-        return _live(
-            _read_segments(self.spark, self._segs, "docs"), self._tombstones
-        )
+        return _live(self._all_docs, self._tombstones)
 
     @_held
     def postings(self) -> DataFrame:
@@ -896,9 +869,7 @@ class MultiReader:
     def term_dict(self) -> DataFrame:
         if self.as_of is None:
             return read_table(
-                self.spark,
-                "term_dict",
-                os.path.join(self.inc.root, "merged", "term_dict.parquet"),
+                self.spark, "term_dict", self.inc._merged_term_dict_dir
             )
         # snapshot read: merge the prefix's dictionaries on the fly
         # (the persisted merged/ artifacts only describe the latest
@@ -908,30 +879,36 @@ class MultiReader:
     @_held
     def hints(self) -> DataFrame:
         """Hint words with at least one LIVE doc: merged-dictionary df
-        minus the removed-doc counts recorded at tombstone time, so
-        deleted-only words drop out of autocomplete without a
-        compact() (reference CodeIndexBuilder.cs:369-375,446-452)."""
+        minus the word's tombstoned docs, so deleted-only words drop
+        out of autocomplete without a compact() (reference
+        CodeIndexBuilder.cs:369-375,446-452). The dictionary is keyed
+        (field, term), so the words are already unique."""
         td = self.inc_term_counts()
         live = td.filter(
             (F.length("word") >= 4) & (F.length("word") <= 199)
             & (F.col("df") > F.col("removed"))
         )
-        return live.select(
-            "word", F.lower("word").alias("word_lower")
-        ).distinct()
+        return live.select("word", F.lower("word").alias("word_lower"))
 
     def inc_term_counts(self) -> DataFrame:
+        """The merged dictionary's ``content_cs`` words with their
+        ``df`` and ``removed``: how many of the docs holding the word
+        are tombstoned at this reader's epoch. Only the reader's
+        tombstoned docs are tokenized (the churn since the last
+        compaction, never the corpus), and a semi-join matches each
+        doc once however often its key was tombstoned."""
         td = self.term_dict.filter(F.col("field") == "content_cs").select(
             F.col("term").alias("word"), "df"
         )
-        rw_dir = self.inc._removed_words_dir
-        if os.path.exists(rw_dir):
-            rw = _up_to(
-                read_table(self.spark, "removed_words", rw_dir), self.as_of
-            )
-            rw = rw.groupBy("word").agg(F.sum("removed").alias("removed"))
-            return td.join(rw, "word", "left").fillna({"removed": 0})
-        return td.withColumn("removed", F.lit(0))
+        if self._tombstones is None:
+            return td.withColumn("removed", F.lit(0))
+        dead = self._all_docs.join(self._tombstones, "doc_key", "left_semi")
+        removed = (
+            token_rows(dead, fields=("content_cs",))
+            .groupBy(F.col("term").alias("word"))
+            .agg(F.count(F.lit(1)).alias("removed"))
+        )
+        return td.join(removed, "word", "left").fillna({"removed": 0})
 
     @_held
     def stats(self) -> pd.DataFrame:

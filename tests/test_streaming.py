@@ -24,6 +24,7 @@ from codeindex_spark.streaming.maintain import (
     maintain_stream,
     reconcile,
 )
+from codeindex_spark.tokenizer import tokenize
 
 PARAMS = IndexParams(num_buckets=8, block_size=32)
 
@@ -274,6 +275,9 @@ def test_update_without_new_commit_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="updates must carry a new commit"):
         inc.apply_snapshot(spark.createDataFrame(v2))
     assert inc.n_applies() == 0
+    # refused before any write: no tombstone, no delta segment
+    assert not os.path.exists(inc._tomb_dir)
+    assert not os.path.exists(os.path.join(inc.root, "deltas"))
 
 
 def test_incremental_search_semantics(spark, inc_index, versions):
@@ -571,7 +575,7 @@ def test_declared_schemas_match_written_tables(spark, tmp_path, versions):
 
     def check_index(index_dir):
         paths = IndexPaths(index_dir)
-        for table in ("docs", "postings", "term_dict", "hints"):
+        for table in ("docs", "postings", "term_dict"):
             check(table, getattr(paths, table))
 
     segs = inc.segments()
@@ -579,7 +583,6 @@ def test_declared_schemas_match_written_tables(spark, tmp_path, versions):
     for seg in segs:
         check_index(seg["dir"])
     check("tombstones", inc._tomb_dir)
-    check("removed_words", inc._removed_words_dir)
     check("term_dict", os.path.join(inc.root, "merged", "term_dict.parquet"))
     merged_dir = str(tmp_path / "drift_merged")
     merge_indexes(spark, [seg["dir"] for seg in segs], merged_dir)
@@ -592,8 +595,8 @@ def test_declared_schemas_match_written_tables(spark, tmp_path, versions):
 
 
 def _index_state(inc):
-    """What a latest reader serves, plus the tombstone and
-    removed-word logs: live docs, top-k, hints, log rows."""
+    """What a latest reader serves, plus the tombstone log: live docs,
+    top-k, hints, log rows."""
     rdr = inc.reader()
     eng = SearchEngine(rdr)
     return {
@@ -606,9 +609,13 @@ def _index_state(inc):
         ],
         "hints": sorted(r["word"] for r in rdr.hints.collect()),
         "tombstones": _log_rows(inc, inc._tomb_dir, "doc_key", "epoch"),
-        "removed": _log_rows(
-            inc, inc._removed_words_dir, "word", "removed", "epoch"
-        ),
+    }
+
+
+def _hint_words(contents) -> set[str]:
+    """The hint words (cased tokens of length 4..199) of ``contents``."""
+    return {
+        w for c in contents for w in tokenize(c) if 4 <= len(w) <= 199
     }
 
 
@@ -621,11 +628,11 @@ def test_apply_crash_before_commit_then_retry(
     spark, tmp_path, versions, monkeypatch
 ):
     """A crash between the tombstone append and the _segments.json
-    write (here: the delta build raises) leaves the tombstones and
-    removed words visible to a latest reader, without the new
-    versions; the pre-apply epoch still reads the old state. A
-    retried apply_snapshot then ends exactly where an uncrashed apply
-    does, removed words counted once."""
+    write (here: the delta build raises) leaves the tombstones visible
+    to a latest reader, without the new versions: its hints are the
+    live docs' words. The pre-apply epoch still reads the old state.
+    A retried apply_snapshot then ends exactly where an uncrashed
+    apply does, hints included (removed docs counted once)."""
     from codeindex_spark.index.segments import IndexBuilder
 
     v1, v2, deleted_path = versions
@@ -648,13 +655,15 @@ def test_apply_crash_before_commit_then_retry(
         with pytest.raises(RuntimeError, match="injected crash"):
             inc.apply_snapshot(spark.createDataFrame(v2))
 
-    # the crash window: nothing committed, the logs already appended
+    # the crash window: nothing committed, the tombstones appended
     assert inc.n_applies() == 0 and len(inc.segments()) == 1
     assert os.path.exists(inc._tomb_dir)
-    assert os.path.exists(inc._removed_words_dir)
     gone = {updated_path, deleted_path}
     live = {r["path"] for r in inc.reader().docs.select("path").collect()}
     assert live == set(v1["path"]) - gone
+    assert {r["word"] for r in inc.reader().hints.collect()} == _hint_words(
+        v1[~v1["path"].isin(gone)]["content"]
+    )
     eng = SearchEngine(inc.reader())
     assert eng.search("uniquenewterm", k=10).count() == 0
     assert eng.search("addeddocterm", k=10).count() == 0
@@ -671,7 +680,8 @@ def test_apply_crash_before_commit_then_retry(
 
 def test_apply_changes_tombstones_each_key_once(spark, tmp_path, versions):
     """apply_changes deduplicates its keys and skips already
-    tombstoned ones: neither log records a key twice."""
+    tombstoned ones: the log records no key twice, and a doc's words
+    count it as removed once."""
     v1, v2, _ = versions
     inc = IncrementalIndex(spark, str(tmp_path / "idem"), PARAMS, n_groups=1)
     inc.build_base(spark.createDataFrame(v1))
@@ -689,11 +699,27 @@ def test_apply_changes_tombstones_each_key_once(spark, tmp_path, versions):
     live_key = inc.live_docs().filter(F.col("path") == v1.loc[0, "path"])
     live_key = live_key.select("doc_key").collect()[0]["doc_key"]
     twice = spark.createDataFrame([(live_key,)] * 2, ["doc_key"])
+    removed_before = _removed_counts(inc)
     inc.apply_changes(no_docs, dead.unionByName(twice))
     after = _index_state(inc)
     assert after["tombstones"] == sorted(before["tombstones"] + [(live_key, 3)])
-    removed = [n for _word, n, epoch in after["removed"] if epoch == 3]
-    assert removed and set(removed) == {1}  # the one doc, counted once
+    removed_after = _removed_counts(inc)
+    grown = {
+        w: n - removed_before[w]
+        for w, n in removed_after.items()
+        if n != removed_before[w]
+    }
+    # the one doc, counted once: exactly its words, each by 1
+    assert grown and set(grown.values()) == {1}
+    assert set(grown) == {
+        w for w in tokenize(v1.loc[0, "content"]) if w in removed_after
+    }
+
+
+def _removed_counts(inc) -> dict:
+    """word -> tombstoned docs holding it, as a latest reader counts."""
+    rows = inc.reader().inc_term_counts().collect()
+    return {r["word"]: r["removed"] for r in rows}
 
 
 def test_maintain_stream(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -15,6 +16,7 @@ from codeindex_spark.corpus import CorpusSpec, generate_documents
 from codeindex_spark.index.build import IndexParams
 from codeindex_spark.query.planner import SearchEngine
 from codeindex_spark.streaming.maintain import IncrementalIndex
+from codeindex_spark.tokenizer import tokenize
 
 PARAMS = IndexParams(num_buckets=8, block_size=32)
 QUERY = "def"  # common token present across the synthetic corpus
@@ -188,11 +190,12 @@ def test_as_of_reader_after_compact_raises(one_apply):
 
 
 def test_logs_without_epoch_stay_visible_at_every_epoch(spark, tmp_path):
-    """Tombstones and removed words written before epochs existed have
-    no ``epoch`` column. Opened with the declared schema, it reads as
-    NULL, and such rows stay visible at every epoch, as they were when
-    the files were read with an inferred schema: live_docs(),
-    reader() and reader(as_of=k) serve the same docs and hints."""
+    """Tombstones written before epochs existed have no ``epoch``
+    column. Opened with the declared schema, it reads as NULL, and such
+    rows stay visible at every epoch, as they were when the files were
+    read with an inferred schema: live_docs(), reader() and
+    reader(as_of=k) serve the same docs, and the hints of epoch k drop
+    the words whose every doc there is tombstoned."""
     v1 = generate_documents(CorpusSpec(n_docs=30))
     inc = IncrementalIndex(spark, str(tmp_path / "legacy"), PARAMS, n_groups=1)
     inc.build_base(spark.createDataFrame(v1))
@@ -209,18 +212,14 @@ def test_logs_without_epoch_stay_visible_at_every_epoch(spark, tmp_path):
         return {r["word"] for r in rdr.hints.collect()}
 
     latest_docs, latest_hints = keys(inc.live_docs()), hints(inc.reader())
-    # rewrite both logs in the pre-epoch layout
-    for path in (inc._tomb_dir, inc._removed_words_dir):
-        legacy = pd.read_parquet(path).drop(columns="epoch")
-        shutil.rmtree(path)
-        os.makedirs(path)
-        legacy.to_parquet(os.path.join(path, "part-00000.parquet"), index=False)
+    # rewrite the tombstones in the pre-epoch layout
+    legacy = pd.read_parquet(inc._tomb_dir).drop(columns="epoch")
+    shutil.rmtree(inc._tomb_dir)
+    os.makedirs(inc._tomb_dir)
+    legacy.to_parquet(os.path.join(inc._tomb_dir, "part-00000.parquet"), index=False)
     assert "epoch" not in spark.read.parquet(inc._tomb_dir).columns
-    tomb = set(pd.read_parquet(inc._tomb_dir)["doc_key"])
-    removed = (
-        pd.read_parquet(inc._removed_words_dir).groupby("word")["removed"].sum()
-    )
-    assert len(tomb) == 2 and len(removed)
+    tomb = set(legacy["doc_key"])
+    assert len(tomb) == 2
 
     assert keys(inc.live_docs()) == latest_docs
     assert hints(inc.reader()) == latest_hints
@@ -234,6 +233,15 @@ def test_logs_without_epoch_stay_visible_at_every_epoch(spark, tmp_path):
             .select("term", "df")
             .toPandas()
         )
+        # per word, the docs of epoch k that a tombstone hides
+        dead = (
+            inc.all_docs(as_of=k)
+            .filter(F.col("doc_key").isin(sorted(tomb)))
+            .select("content")
+            .toPandas()
+        )
+        assert len(dead), k
+        removed = Counter(w for c in dead["content"] for w in set(tokenize(c)))
         want_hints = {
             t
             for t, df in zip(td["term"], td["df"])
