@@ -5,25 +5,29 @@ one pipeline (the "joins" of an IR engine, SURVEY.md §2.4):
 
 1. Plan rows — a pure leaf walk assigns leaf ids and lists each
    leaf's dictionary wants (no Spark); the exact terms of every query
-   in the call resolve in ONE cached dictionary lookup, and
-   wildcard/regexp/fuzzy/range leaves expand against the term
-   dictionary. Prefix patterns become a *range* predicate on the
-   term-sorted dictionary parquet (row-group pruning); fuzzy uses a
-   length window + JVM-side levenshtein. Expansions are capped at
-   1024 terms (Lucene's maxClauseCount) deterministically (term asc).
-   The result is (field, term, leaf_id, slot, idf) mapping rows.
-2. Candidate join — postings filtered to the rows' (field, term)
+   in the call resolve in ONE cached lookup that the reader runs on
+   the driver (its dictionary as a pyarrow dataset, field-directory
+   and row-group pruned: no Spark job). Wildcard/regexp/fuzzy/range
+   leaves expand against the Spark term dictionary. Prefix patterns
+   become a *range* predicate on the term-sorted dictionary parquet
+   (row-group pruning); fuzzy uses a length window + JVM-side
+   levenshtein. Expansions are capped at 1024 terms (Lucene's
+   maxClauseCount) deterministically (term asc). The result is
+   (field, term, leaf_id, slot, idf, df) mapping rows.
+2. Candidate scan — postings filtered to the rows' (field, term)
    set: directory pruning on field, min/max row-group pruning on
-   term. A broadcast join attaches (leaf_id, slot, idf) to each block
-   row.
-3. Block stream — one repartition + sort on block_id and ONE
-   mapInPandas pass that carries a block's rows across Arrow batches:
-   all query terms share doc-aligned blocks (block_id = doc_id //
-   BLOCK_SIZE), so boolean intersection / union / difference and
-   phrase adjacency are numpy set ops *within one block*, with no
+   term. The rows do not enter Spark.
+3. Block stream — a sort on block_id and ONE mapInPandas pass that
+   carries a block's rows across Arrow batches and merges each posting
+   row with its mapping rows (leaf_id, slot, idf) from the kernel's
+   closure: all query terms share doc-aligned blocks (block_id =
+   doc_id // BLOCK_SIZE), so boolean intersection / union / difference
+   and phrase adjacency are numpy set ops *within one block*, with no
    doc-level shuffle — the distributed analog of Lucene's skip-list
-   merge. Pure disjunctions take a fully vectorized kernel; other
-   trees the per-block tree kernel.
+   merge. The task count comes from the rows' summed df (the entries
+   the kernel decodes): one task reads through coalesce(1), with no
+   exchange; more hash-partition on block_id. Pure disjunctions take
+   a fully vectorized kernel; other trees the per-block tree kernel.
 4. Collector — metadata filters (repo/lang/ext/path) are DataFrame
    predicates on the docs table, semi-joined with scored docs (BM25
    statistics stay corpus-global, like Lucene filter clauses); top-k
@@ -43,6 +47,7 @@ doc_id asc) — deterministic because docIDs are (see index/docids.py).
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import re
@@ -493,16 +498,71 @@ def _page_after(scored: DataFrame, after: tuple[float, int]) -> DataFrame:
     )
 
 
+ENTRIES_PER_TASK = 1_000_000
+"""Block-stream work target per task, in posting entries (the mapping
+rows' summed df: each mapping row decodes its term's blocks). On one
+core of the 4-core host, merge + decode + score runs at ~4.9M
+entries/s for a 31-term disjunction (116k entries), ~3.7M for a
+boolean tree and ~0.9-1.1M for phrases (positions decoded). 1M
+entries is ~0.2-1 s of kernel time, above the ~100 ms surcharge of a
+Python task plus the hash exchange a second task needs; every query of
+a 1500-doc index (hot terms ~1.4k entries each) streams in one task."""
+
+
+def stream_task_count(entries: int, cap: int) -> int:
+    """Tasks of a block stream that decodes ``entries`` posting
+    entries: one per ``ENTRIES_PER_TASK``, at least 1, at most ``cap``
+    (the shuffle partitions)."""
+    return max(1, min(int(cap), -(-int(entries) // ENTRIES_PER_TASK)))
+
+
+def _idf_sum_col(rows: list[dict], occurrences: Counter):
+    """Σ idf of the mapping rows of each (field, term), each row counted
+    as often as its leaf occurs in the query (``occurrences``: leaf_id
+    -> count), as a literal column: a CASE on field over per-field
+    literal maps of term."""
+    sums: dict[str, dict[str, float]] = {}
+    for r in rows:
+        by_term = sums.setdefault(r["field"], {})
+        by_term[r["term"]] = (
+            by_term.get(r["term"], 0.0) + r["idf"] * occurrences[r["leaf_id"]]
+        )
+    col = None
+    for fld, by_term in sorted(sums.items()):
+        lookup = F.create_map(
+            *[x for t, v in sorted(by_term.items()) for x in (F.lit(t), F.lit(v))]
+        )[F.col("term")]
+        is_fld = F.col("field") == fld
+        col = F.when(is_fld, lookup) if col is None else col.when(is_fld, lookup)
+    return col
+
+
 def _score_blocks(
-    candidates: DataFrame, kernel, schema: T.StructType = SCORE_SCHEMA
+    candidates: DataFrame,
+    rows: list[dict],
+    kernel,
+    schema: T.StructType = SCORE_SCHEMA,
 ) -> DataFrame:
-    """The block stream every scored surface ends in: candidates
-    shuffle on block_id, sort within partitions, and ONE mapInPandas
-    pass runs ``kernel`` over whole block runs — the rows of the last
-    block in an Arrow batch carry into the next batch, so no block is
-    ever split across kernel calls (one pass instead of a grouped map
-    per block). ``kernel`` maps a block-sorted body to ``schema``
-    rows."""
+    """The block stream every scored surface ends in: candidates sort
+    on block_id within partitions, and ONE mapInPandas pass runs
+    ``kernel`` over whole block runs — the rows of the last block in
+    an Arrow batch carry into the next batch, so no block is ever
+    split across kernel calls (one pass instead of a grouped map per
+    block). Before the kernel, each posting row fans out to its
+    mapping ``rows`` (leaf_id, slot, idf[, qid]), merged in pandas
+    from the closure: no mapping frame, no Spark join. ``kernel``
+    maps a block-sorted body to ``schema`` rows.
+
+    The stream runs ``stream_task_count`` tasks, sized from the rows'
+    summed df: one task reads the candidates through ``coalesce(1)``
+    (no exchange), more repartition on block_id."""
+    mapping = pd.DataFrame(rows).drop(columns="df")
+
+    def attach(body: pd.DataFrame) -> pd.DataFrame:
+        # the stable sort keeps each block's rows one run
+        return body.merge(mapping, on=["field", "term"]).sort_values(
+            "block_id", kind="stable", ignore_index=True
+        )
 
     def stream(batches):
         carry = None
@@ -517,14 +577,20 @@ def _score_blocks(
             carry = pdf[in_last]
             body = pdf[~in_last]
             if len(body):
-                yield kernel(body)
+                yield kernel(attach(body))
         if carry is not None and len(carry):
-            yield kernel(carry)
+            yield kernel(attach(carry))
 
-    shuffled = candidates.repartition(F.col("block_id")).sortWithinPartitions(
-        "block_id"
+    spark = candidates.sparkSession
+    n = stream_task_count(
+        sum(r["df"] for r in rows),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    return shuffled.mapInPandas(stream, schema=schema)
+    if n == 1:
+        parts = candidates.coalesce(1)
+    else:
+        parts = candidates.repartition(n, "block_id")
+    return parts.sortWithinPartitions("block_id").mapInPandas(stream, schema=schema)
 
 
 class SearchEngine:
@@ -699,8 +765,9 @@ class SearchEngine:
     def _lookup_exact_df(
         self, exact_terms: dict[str, set[str]]
     ) -> dict[tuple[str, str], int]:
-        """One dictionary job for a (field -> terms) want-set; cached
-        (field, term) hits — including negative ones — skip the job."""
+        """df of a (field -> terms) want-set, read on the driver
+        through the reader's dictionary dataset (no Spark job); cached
+        (field, term) hits — including negative ones — skip the read."""
         exact_df: dict[tuple[str, str], int] = {}
         if not exact_terms:
             return exact_df
@@ -714,16 +781,7 @@ class SearchEngine:
                     exact_df[(fld, t)] = hit
         if not missing:
             return exact_df
-        cond = None
-        for fld, ts in missing.items():
-            c = (F.col("field") == fld) & F.col("term").isin(sorted(ts))
-            cond = c if cond is None else (cond | c)
-        for r in (
-            self.reader.term_dict.filter(cond)
-            .select("field", "term", "df")
-            .collect()
-        ):
-            exact_df[(r["field"], r["term"])] = r["df"]
+        exact_df.update(self.reader.term_dfs(missing))
         for fld, ts in missing.items():
             for t in ts:  # cache absent terms as None (negative hit)
                 self._cache_put(
@@ -837,8 +895,8 @@ class SearchEngine:
     def _mapping_rows(
         self, wants: list, exact_df: dict[tuple[str, str], int]
     ) -> list[dict]:
-        """Turn a walk's wants into (field, term, leaf_id, slot, idf)
-        mapping rows: exact terms take their df from ``exact_df``,
+        """Turn a walk's wants into (field, term, leaf_id, slot, idf,
+        df) mapping rows: exact terms take their df from ``exact_df``,
         multi-term nodes expand against the dictionary (cached)."""
         rows: list[dict] = []
         for leaf, lid, slot, spec in wants:
@@ -874,7 +932,7 @@ class SearchEngine:
                 else:
                     idf = sum(idf_bm25(n_docs, d) for _, d in present) * boost
                 slot = SLOT_SYNONYM if slot == SLOT_SPAN_OR else slot
-                term_idfs = [(t, idf) for t, _ in present]
+                term_idfs = [(t, d, idf) for t, d in present]
             else:
                 if isinstance(spec, str):
                     df = exact_df.get((fld, spec))
@@ -882,9 +940,9 @@ class SearchEngine:
                 else:
                     found = self._expand(fld, spec)
                 term_idfs = [
-                    (t, idf_bm25(n_docs, df) * boost) for t, df in found
+                    (t, df, idf_bm25(n_docs, df) * boost) for t, df in found
                 ]
-            for term, idf in term_idfs:
+            for term, df, idf in term_idfs:
                 rows.append(
                     {
                         "field": fld,
@@ -892,6 +950,7 @@ class SearchEngine:
                         "leaf_id": lid,
                         "slot": slot,
                         "idf": idf,
+                        "df": df,
                     }
                 )
         return rows
@@ -919,21 +978,17 @@ class SearchEngine:
 
     # ---------- execution ----------
 
-    def _candidate_join(self, rows: list[dict]) -> DataFrame:
+    def _candidate_postings(self, rows: list[dict]) -> DataFrame:
         """Mapping rows -> candidate postings: the (field, term) isin
         predicate reaches the postings scan (field directory pruning,
-        term row-group pruning) and the rows broadcast-join on
-        (field, term), attaching (leaf_id, slot, idf) and any extra
-        row columns to each block row."""
-        mapping = self.reader.spark.createDataFrame(pd.DataFrame(rows))
+        term row-group pruning). The rows themselves join in the
+        block stream (``_score_blocks``), not in Spark."""
         cond = None
         for f in sorted({r["field"] for r in rows}):
             ts = sorted({r["term"] for r in rows if r["field"] == f})
             c = (F.col("field") == f) & F.col("term").isin(ts)
             cond = c if cond is None else (cond | c)
-        return self.reader.postings.filter(cond).join(
-            F.broadcast(mapping), ["field", "term"]
-        )
+        return self.reader.postings.filter(cond)
 
     def _kernel(self, root: ast.Node, leaf_ids: dict, rows: list[dict]):
         """Block kernel of one query. Pure disjunctions (keyword,
@@ -958,20 +1013,27 @@ class SearchEngine:
         )
 
     def _candidates(self, root: ast.Node):
-        """Candidate postings of one query plus its block kernel, or
-        (None, None) when no leaf resolves to a dictionary term."""
+        """Candidate postings of one query, its mapping rows and its
+        block kernel, or (None, None, None) when no leaf resolves to a
+        dictionary term."""
         planned = self._plan({"": root}).get("")
         if planned is None:
-            return None, None
+            return None, None, None
         leaf_ids, rows = planned
-        return self._candidate_join(rows), self._kernel(root, leaf_ids, rows)
+        return (
+            self._candidate_postings(rows),
+            rows,
+            self._kernel(root, leaf_ids, rows),
+        )
 
     def score(self, query: ast.Node | str, case_sensitive: bool = False) -> DataFrame:
         """Evaluate to a (doc_id, score) DataFrame of matching docs."""
-        candidates, kernel = self._candidates(_as_root(query, case_sensitive))
+        candidates, rows, kernel = self._candidates(
+            _as_root(query, case_sensitive)
+        )
         if candidates is None:
             return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
-        return _score_blocks(candidates, kernel)
+        return _score_blocks(candidates, rows, kernel)
 
     def explain(
         self, query: ast.Node | str, case_sensitive: bool = False
@@ -1049,9 +1111,8 @@ class SearchEngine:
             q: self._kernel(roots[q], leaf_ids, rows)
             for q, (leaf_ids, rows) in planned.items()
         }
-        candidates = self._candidate_join(
-            [{**r, "qid": q} for q, (_, rows) in planned.items() for r in rows]
-        )
+        rows = [{**r, "qid": q} for q, (_, qrows) in planned.items() for r in qrows]
+        candidates = self._candidate_postings(rows)
 
         def combined(body: pd.DataFrame) -> pd.DataFrame:
             outs = []
@@ -1070,7 +1131,7 @@ class SearchEngine:
                 )
             return pd.concat(outs, ignore_index=True)
 
-        return _score_blocks(candidates, combined, MULTI_SCORE_SCHEMA)
+        return _score_blocks(candidates, rows, combined, MULTI_SCORE_SCHEMA)
 
     def search_many(
         self,
@@ -1119,7 +1180,9 @@ class SearchEngine:
         Correctness: for any doc d in block B,
         score(d) <= UB(B) = Σ_leaf-rows idf * block_max_tfnorm, because
         every evaluation mode (term/AND/OR/phrase) sums at most every
-        leaf contribution and phrase adjacency only removes docs. So
+        leaf contribution and phrase adjacency only removes docs (a
+        clause written n times contributes n times, so its rows count
+        n times in the sum). So
         dropping blocks with UB(B) < θ (θ = k-th score of a seed set)
         can never evict a true top-k doc. Synonym groups stay sound
         too: BM25's tf-saturation is concave with TF(0)=0, hence
@@ -1133,7 +1196,7 @@ class SearchEngine:
           3. decode blocks with UB >= θ, exact top-k.
         """
         root = _as_root(query, case_sensitive)
-        candidates, kernel = self._candidates(root)
+        candidates, rows, kernel = self._candidates(root)
         spark = self.reader.spark
         if candidates is None:
             return spark.createDataFrame([], SCORE_SCHEMA)
@@ -1141,7 +1204,7 @@ class SearchEngine:
         def top(cands: DataFrame) -> list:
             """Exact top-k rows of a candidate slice (after the page
             anchor, when paging)."""
-            scored = _score_blocks(cands, kernel)
+            scored = _score_blocks(cands, rows, kernel)
             if after is not None:
                 scored = _page_after(scored, after)
             top_k = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1165,10 +1228,16 @@ class SearchEngine:
             if "_ub_scale" in candidates.columns
             else F.lit(1.0)
         )
+        # a posting row stands for each of its mapping rows, so its
+        # bound is its block max times the Σ idf of those rows
+        leaf_ids = self._walk_leaves(root)[0]
+        occurrences = Counter(leaf_ids[leaf] for leaf in ast.collect_leaves(root))
         meta = candidates.groupBy("block_id").agg(
-            F.sum(F.col("idf") * F.col("block_max_tfnorm") * scale).alias(
-                "ub"
-            )
+            F.sum(
+                _idf_sum_col(rows, occurrences)
+                * F.col("block_max_tfnorm")
+                * scale
+            ).alias("ub")
         ).cache()
         try:
             n_seed = max(1, -(-4 * k // bsz))
@@ -1181,15 +1250,15 @@ class SearchEngine:
             )
             if len(seed_scored) < k:
                 # not enough docs to establish θ — fall back to exact
-                rows = top(candidates)
+                best = top(candidates)
             else:
                 theta = seed_scored[-1]["score"]
                 keep = meta.filter(F.col("ub") >= theta).select("block_id")
-                rows = top(
+                best = top(
                     candidates.join(F.broadcast(keep), "block_id", "left_semi")
                 )
             # materialized (<= k rows) so the cache can be released
-            return spark.createDataFrame(rows, schema=SCORE_SCHEMA)
+            return spark.createDataFrame(best, schema=SCORE_SCHEMA)
         finally:
             meta.unpersist(blocking=False)
 
@@ -1197,12 +1266,13 @@ class SearchEngine:
         self, scored: DataFrame, filters: Filters | None, live=_MISS
     ) -> DataFrame:
         # tombstone-aware readers (incremental MultiReader) expose the
-        # live doc set; postings may still contain replaced/deleted docs
-        scored = self._semi_join_live(scored, live)
+        # live doc set; postings may still contain replaced/deleted
+        # docs. The reader's docs are its live docs, so a filter on
+        # them is the one semi-join a filtered query needs.
         if filters is not None and not filters.empty:
             allowed = filters.apply(self.reader.docs).select("doc_id")
-            scored = scored.join(allowed, "doc_id", "left_semi")
-        return scored
+            return scored.join(allowed, "doc_id", "left_semi")
+        return self._semi_join_live(scored, live)
 
     def _live_filtered_scores(
         self,
@@ -1212,17 +1282,21 @@ class SearchEngine:
     ) -> DataFrame:
         return self._live_filtered(self.score(query, case_sensitive), filters)
 
+    @functools.cached_property
+    def _doc_meta(self) -> DataFrame:
+        """The docs-metadata projection a with-docs top-k joins."""
+        return self.reader.docs.select(
+            "doc_id", "repo", "path", "commit", "lang", "file_name", "file_ext"
+        )
+
     def _collect_top(self, scored: DataFrame, k: int, with_docs: bool):
         top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if with_docs:
-            meta = self.reader.docs.select(
-                "doc_id", "repo", "path", "commit", "lang", "file_name", "file_ext"
-            )
             # the join on unique doc_id keeps the <= k top rows, so
             # ordering again with the same limit ends the plan in a
             # TakeOrderedAndProject instead of a range-partitioned sort
             top = (
-                top.join(meta, "doc_id")
+                top.join(self._doc_meta, "doc_id")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k)
             )
@@ -1300,10 +1374,10 @@ class SearchEngine:
             # doc once (segments are doc-disjoint after merge)
             key = (root.field, root.term)
             return self._lookup_exact_df({key[0]: {key[1]}}).get(key, 0)
-        candidates, kernel = self._candidates(root)
+        candidates, rows, kernel = self._candidates(root)
         if candidates is None:
             return 0
-        matches = _score_blocks(candidates, kernel)
+        matches = _score_blocks(candidates, rows, kernel)
         return self._live_filtered(matches, filters, live).count()
 
     def search_collapse(

@@ -56,6 +56,7 @@ from codeindex_spark.index.segments import (
     IndexPaths,
     IndexReader,
     read_table,
+    term_dict_dataset,
 )
 
 CHANGE_TYPES = ("Created", "Changed", "Deleted", "Renamed")
@@ -777,10 +778,11 @@ class MultiReader:
     and a drop-in for SearchEngine.
 
     The segment list is pinned at open; each table frame (``docs``,
-    ``postings``, ``term_dict``, ``hints``) and ``stats`` is opened on
-    first access, with its declared schema where it reads a table,
-    and then held, so a query does not re-list files per access. The held frames keep the file
-    listing they were opened with: reopen the reader
+    ``postings``, ``term_dict``, ``hints``), the dictionary's pyarrow
+    dataset (``term_dfs``) and ``stats`` is opened on first access,
+    with its declared schema where it reads a table, and then held, so
+    a query does not re-list files per access. The held frames keep
+    the file listing they were opened with: reopen the reader
     after apply_*(), compact() or merge_compact(). Every access checks
     ``_segments.json`` (no Spark job): a latest-view reader raises
     ValueError once the index has changed; an ``as_of`` reader keeps
@@ -875,6 +877,17 @@ class MultiReader:
         # (the persisted merged/ artifacts only describe the latest
         # epoch); the union is |prefix| vocabulary-sized frames
         return _merged_term_dict(self.spark, self._segs)
+
+    @_held
+    def _term_dict_ds(self):
+        """The dictionary as a pyarrow dataset, for ``term_dfs``: the
+        merged dictionary, or for an ``as_of`` reader every pinned
+        segment's own (``term_dfs`` sums their df)."""
+        if self.as_of is None:
+            return term_dict_dataset([self.inc._merged_term_dict_dir])
+        return term_dict_dataset([IndexPaths(s["dir"]).term_dict for s in self._segs])
+
+    term_dfs = IndexReader.term_dfs
 
     @_held
     def hints(self) -> DataFrame:

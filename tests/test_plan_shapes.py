@@ -16,7 +16,13 @@ from codeindex_spark.corpus import CorpusSpec, generate_documents, spark_documen
 from codeindex_spark.index.build import IndexParams
 from codeindex_spark.index.segments import IndexBuilder, IndexReader
 from codeindex_spark.query import ast
-from codeindex_spark.query.planner import SearchEngine
+from codeindex_spark.query import planner
+from codeindex_spark.query.planner import (
+    ENTRIES_PER_TASK,
+    Filters,
+    SearchEngine,
+    stream_task_count,
+)
 from codeindex_spark.streaming.maintain import IncrementalIndex
 
 PARAMS = IndexParams(num_buckets=16, block_size=32)
@@ -61,6 +67,20 @@ def _jobs_in(spark, fn) -> list[int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_plans_in(spark, fn) -> list[str]:
+    """Physical-plan descriptions of the SQL executions ``fn()`` runs
+    (read from the SQL status store, which is kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _scala(store.executionsList())}
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        e.physicalPlanDescription()
+        for e in _scala(store.executionsList())
+        if e.executionId() not in before
+    ]
 
 
 def _scala(seq) -> list:
@@ -215,6 +235,21 @@ def test_stacked_warm_search_plans_without_jobs(spark, stacked_engine):
     assert jobs == []
 
 
+def test_stacked_filtered_search_joins_live_set_once(stacked_engine):
+    """A filter on the stacked reader's docs (its live docs) is the
+    only semi-join a filtered search needs: its plan holds as many
+    semi- and anti-joins as the unfiltered search's."""
+    q = ast.parse_query("get OR string")
+
+    def joins(frame):
+        plan = _final_plan(frame).toString()
+        return plan.count("LeftSemi"), plan.count("LeftAnti")
+
+    unfiltered = joins(stacked_engine.search(q, k=5))
+    filtered = joins(stacked_engine.search(q, k=5, filters=Filters(lang="python")))
+    assert filtered == unfiltered
+
+
 def test_warm_term_count_launches_no_job(spark, engine):
     """A lone Term's count answers from the cached dictionary df:
     once warm, it launches no Spark job."""
@@ -224,6 +259,68 @@ def test_warm_term_count_launches_no_job(spark, engine):
     jobs = _jobs_in(spark, lambda: engine.count(q))
     assert jobs == []
     assert engine.count(q) == n
+
+
+def test_uncached_exact_search_runs_two_jobs(spark, engine):
+    """An exact-term search with an empty dictionary cache plans with
+    no Spark job (the dictionary is read on the driver) and collects
+    in at most two: the top-k stage and the docs join. The one-task
+    block stream needs no exchange."""
+    eng = SearchEngine(engine.reader)
+    q = ast.parse_query("get OR string")
+    frames = []
+    plan_jobs = _jobs_in(
+        spark, lambda: frames.append(eng.search(q, k=5, with_docs=True))
+    )
+    assert plan_jobs == []
+    assert len(_jobs_in(spark, frames[0].collect)) <= 2
+    assert frames[0].collect() == engine.search(q, k=5, with_docs=True).collect()
+
+
+@pytest.mark.parametrize("surface", ["search", "score_many", "search_wand", "count"])
+def test_scored_plans_hold_no_mapping_rows(spark, engine, surface):
+    """The mapping rows (leaf_id, slot, idf) merge onto the postings
+    inside the block kernel: no executed plan of a scored surface
+    carries them as a local table or joins them in Spark."""
+    q = ast.parse_query("get OR string")
+    run = {
+        "search": lambda: engine.search(q, k=5, with_docs=True).collect(),
+        "score_many": lambda: engine.score_many(
+            {"a": q, "b": '"get string"'}
+        ).collect(),
+        "search_wand": lambda: engine.search_wand(q, k=5).collect(),
+        "count": lambda: engine.count(q),
+    }[surface]
+    plans = _sql_plans_in(spark, run)
+    assert plans
+    for plan in plans:
+        assert "leaf_id" not in plan, plan
+
+
+def test_small_query_streams_without_exchange(engine):
+    """A query whose summed df fits one task reads its candidates
+    through coalesce(1): no hash exchange on block_id."""
+    plan = _final_plan(engine.search(ast.parse_query("get OR string"), k=5))
+    assert "hashpartitioning(block_id" not in plan.toString()
+
+
+def test_stream_task_count_follows_entries():
+    assert stream_task_count(ENTRIES_PER_TASK, 8) == 1
+    assert stream_task_count(ENTRIES_PER_TASK + 1, 8) == 2
+    assert stream_task_count(3 * ENTRIES_PER_TASK, 8) == 3
+    assert stream_task_count(100 * ENTRIES_PER_TASK, 8) == 8
+
+
+def test_multi_task_stream_scores_like_one_task(engine, monkeypatch):
+    """A stream sized to several tasks repartitions on block_id and
+    scores the same rows as the one-task stream."""
+    queries = ["get OR string", '"get string"', "(get OR return) AND string"]
+    want = [engine.search(q, k=20).collect() for q in queries]
+    monkeypatch.setattr(planner, "ENTRIES_PER_TASK", 1)
+    for q, rows in zip(queries, want):
+        frame = engine.search(q, k=20)
+        assert frame.collect() == rows, q
+        assert "hashpartitioning(block_id" in _final_plan(frame).toString()
 
 
 def test_phrase_wildcard_slot_reuses_expansion(spark, engine):

@@ -246,6 +246,21 @@ def test_wand_equals_exact(engine, oracle, q):
     assert [d for d, _ in wand] == [d for d, _ in oracle_top]
 
 
+@pytest.mark.parametrize("q", ["get OR get", "(index AND index) AND writer"])
+def test_wand_repeated_clause_equals_exact(engine, q):
+    """A clause written twice scores twice, so the block bound counts
+    its rows twice: pruning stays invisible (it returned no rows when
+    the bound counted them once)."""
+    exact = [(r["doc_id"], r["score"]) for r in engine.search(q, k=10).collect()]
+    wand = [
+        (r["doc_id"], r["score"]) for r in engine.search_wand(q, k=10).collect()
+    ]
+    assert exact
+    assert [d for d, _ in wand] == [d for d, _ in exact]
+    for (_, sw), (_, se) in zip(wand, exact):
+        assert sw == pytest.approx(se, rel=1e-12)
+
+
 def test_wand_phrase_conservative(engine, oracle):
     q = ast.parse_phrase_query("add documents")
     wand = [(r["doc_id"], r["score"]) for r in engine.search_wand(q, k=10).collect()]

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from codeindex_spark.corpus import CorpusSpec, generate_documents
 from codeindex_spark.index.build import IndexParams
 from codeindex_spark.query.planner import SearchEngine
-from codeindex_spark.streaming.maintain import IncrementalIndex
+from codeindex_spark.streaming.maintain import IncrementalIndex, _merged_term_dict
 from codeindex_spark.tokenizer import tokenize
 
 PARAMS = IndexParams(num_buckets=8, block_size=32)
@@ -113,6 +113,41 @@ def test_as_of_validation(tt):
     inc, _s0, _s1 = tt
     with pytest.raises(ValueError):
         inc.live_docs(as_of=-1)
+
+
+def test_as_of_lookup_sums_segment_dfs(tt, spark):
+    """An ``as_of`` reader's driver-side dictionary lookup sums each
+    pinned segment's df: it equals the Spark merge of those
+    dictionaries, for terms in one segment or in several, and has no
+    entry for an absent term."""
+    inc, _s0, _s1 = tt
+    rdr = inc.reader(as_of=1)
+    merged = (
+        _merged_term_dict(spark, rdr._segs)
+        .filter(F.col("field") == "content")
+        .orderBy(F.desc("df"), "term")
+        .limit(20)
+        .collect()
+    )
+    # the most common terms, and every term of the delta segment
+    delta = pd.read_parquet(
+        os.path.join(rdr._segs[1]["dir"], "term_dict.parquet", "field=content")
+    )
+    sample = {r["term"] for r in merged} | set(delta["term"])
+    want = {
+        ("content", r["term"]): r["df"]
+        for r in _merged_term_dict(spark, rdr._segs)
+        .filter((F.col("field") == "content") & F.col("term").isin(sorted(sample)))
+        .collect()
+    }
+    assert ("content", "snapshotterm") in want
+    # some sampled terms are in both segments, so their df are sums
+    base = pd.read_parquet(
+        os.path.join(rdr._segs[0]["dir"], "term_dict.parquet", "field=content")
+    )
+    assert set(delta["term"]) & set(base["term"])
+    got = rdr.term_dfs({"content": sample | {"zzznotaterm"}})
+    assert got == want
 
 
 def test_live_doc_counts_per_epoch(tt):
