@@ -531,7 +531,12 @@ class IndexReader:
     per access; ``hints`` filters the held dictionary. The held frames
     keep the file
     listing they were opened with: reopen the reader
-    after rebuilding or compacting its directory."""
+    after rebuilding or compacting its directory.
+
+    A finalized directory has no tombstones: every doc is live, so
+    ``all_docs`` is ``docs`` and ``dead_doc_ids`` is None."""
+
+    dead_doc_ids = None
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -541,6 +546,10 @@ class IndexReader:
     @functools.cached_property
     def docs(self) -> DataFrame:
         return read_table(self.spark, "docs", self.paths.docs)
+
+    @property
+    def all_docs(self) -> DataFrame:
+        return self.docs
 
     @functools.cached_property
     def postings(self) -> DataFrame:

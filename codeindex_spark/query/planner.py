@@ -56,7 +56,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -537,21 +537,62 @@ def _idf_sum_col(rows: list[dict], occurrences: Counter):
     return col
 
 
+def _no_rows(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty ``schema`` frame the optimizer folds to an empty local
+    relation: a query over it runs no Spark job."""
+    return (
+        spark.range(1)
+        .select(*[F.lit(0).cast(f.dataType).alias(f.name) for f in schema])
+        .filter(F.lit(False))
+    )
+
+
+# the posting columns a block kernel reads; only kernels that decode
+# positions read POSITION_COLUMNS too
+KERNEL_COLUMNS = ("field", "term", "block_id", "n", "docs_delta", "tfs", "dls")
+POSITION_COLUMNS = ("pos_counts", "pos_deltas")
+
+
+def _needs_positions(leaves) -> bool:
+    """Whether the block kernel of a query with these leaves decodes
+    positions."""
+    return any(
+        isinstance(leaf, (ast.Phrase, ast.SpanFirst, ast.SpanNot))
+        for leaf in leaves
+    )
+
+
+def _drop_dead(scored: pd.DataFrame, dead: np.ndarray) -> pd.DataFrame:
+    """Kernel output rows whose doc_id is not in the sorted ``dead``
+    docIDs."""
+    ids = scored["doc_id"].to_numpy()
+    at = np.searchsorted(dead, ids).clip(max=len(dead) - 1)
+    return scored[dead[at] != ids]
+
+
 def _score_blocks(
     candidates: DataFrame,
     rows: list[dict],
     kernel,
+    need_pos: bool,
+    dead: np.ndarray | None,
     schema: T.StructType = SCORE_SCHEMA,
 ) -> DataFrame:
-    """The block stream every scored surface ends in: candidates sort
-    on block_id within partitions, and ONE mapInPandas pass runs
-    ``kernel`` over whole block runs — the rows of the last block in
-    an Arrow batch carry into the next batch, so no block is ever
-    split across kernel calls (one pass instead of a grouped map per
-    block). Before the kernel, each posting row fans out to its
-    mapping ``rows`` (leaf_id, slot, idf[, qid]), merged in pandas
-    from the closure: no mapping frame, no Spark join. ``kernel``
-    maps a block-sorted body to ``schema`` rows.
+    """The block stream every scored surface ends in: candidates,
+    projected to the columns the kernel reads (``need_pos`` adds the
+    positions), sort on block_id within partitions, and ONE
+    mapInPandas pass runs ``kernel`` over whole block runs — the rows
+    of the last block in an Arrow batch carry into the next batch, so
+    no block is ever split across kernel calls (one pass instead of a
+    grouped map per block). Before the kernel, each posting row fans
+    out to its mapping ``rows`` (leaf_id, slot, idf[, qid]), merged in
+    pandas from the closure: no mapping frame, no Spark join.
+    ``kernel`` maps a block-sorted body to ``schema`` rows.
+
+    The live check is here, once for every scored surface: output rows
+    of a docID in the reader's sorted ``dead`` set are dropped
+    (Lucene's liveDocs check in the scorer). The set ships in the
+    closure, so the plan does not grow with it.
 
     The stream runs ``stream_task_count`` tasks, sized from the rows'
     summed df: one task reads the candidates through ``coalesce(1)``
@@ -563,6 +604,10 @@ def _score_blocks(
         return body.merge(mapping, on=["field", "term"]).sort_values(
             "block_id", kind="stable", ignore_index=True
         )
+
+    def score(body: pd.DataFrame) -> pd.DataFrame:
+        out = kernel(attach(body))
+        return out if dead is None else _drop_dead(out, dead)
 
     def stream(batches):
         carry = None
@@ -577,15 +622,17 @@ def _score_blocks(
             carry = pdf[in_last]
             body = pdf[~in_last]
             if len(body):
-                yield kernel(attach(body))
+                yield score(body)
         if carry is not None and len(carry):
-            yield kernel(attach(carry))
+            yield score(carry)
 
     spark = candidates.sparkSession
     n = stream_task_count(
         sum(r["df"] for r in rows),
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
+    cols = KERNEL_COLUMNS + (POSITION_COLUMNS if need_pos else ())
+    candidates = candidates.select(*cols)
     if n == 1:
         parts = candidates.coalesce(1)
     else:
@@ -626,16 +673,6 @@ class SearchEngine:
             )
         fn = cls._SCORE_MODES[score_mode]
         return (F.lit(0.0) if fn is None else fn("score")).alias("score")
-
-    def _semi_join_live(self, df: DataFrame, live=_MISS) -> DataFrame:
-        """Tombstone guard shared by the query surfaces: semi-join a
-        doc_id-keyed frame with the reader's live-doc set when one
-        exists (incremental indexes carry deleted/replaced docs in
-        their postings until compaction). ``live`` passes in a set
-        the caller already opened."""
-        if live is _MISS:
-            live = getattr(self.reader, "live_doc_ids", lambda: None)()
-        return df if live is None else df.join(live, "doc_id", "left_semi")
 
     def _cache_put(self, cache: dict, cap: int, key, value) -> None:
         if len(cache) >= cap:  # drop the oldest half (insertion order)
@@ -1014,26 +1051,29 @@ class SearchEngine:
 
     def _candidates(self, root: ast.Node):
         """Candidate postings of one query, its mapping rows and its
-        block kernel, or (None, None, None) when no leaf resolves to a
+        block stream (a slice of the candidates -> its live (doc_id,
+        score) rows), or (None, None, None) when no leaf resolves to a
         dictionary term."""
         planned = self._plan({"": root}).get("")
         if planned is None:
             return None, None, None
         leaf_ids, rows = planned
+        kernel = self._kernel(root, leaf_ids, rows)
+        need_pos = _needs_positions(leaf_ids)
+        dead = self.reader.dead_doc_ids
         return (
             self._candidate_postings(rows),
             rows,
-            self._kernel(root, leaf_ids, rows),
+            lambda cands: _score_blocks(cands, rows, kernel, need_pos, dead),
         )
 
     def score(self, query: ast.Node | str, case_sensitive: bool = False) -> DataFrame:
-        """Evaluate to a (doc_id, score) DataFrame of matching docs."""
-        candidates, rows, kernel = self._candidates(
-            _as_root(query, case_sensitive)
-        )
+        """Evaluate to a (doc_id, score) DataFrame of matching live
+        docs."""
+        candidates, _, stream = self._candidates(_as_root(query, case_sensitive))
         if candidates is None:
-            return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
-        return _score_blocks(candidates, rows, kernel)
+            return _no_rows(self.reader.spark, SCORE_SCHEMA)
+        return stream(candidates)
 
     def explain(
         self, query: ast.Node | str, case_sensitive: bool = False
@@ -1106,7 +1146,7 @@ class SearchEngine:
         }
         planned = self._plan(roots)
         if not planned:
-            return self.reader.spark.createDataFrame([], MULTI_SCORE_SCHEMA)
+            return _no_rows(self.reader.spark, MULTI_SCORE_SCHEMA)
         kernels = {
             q: self._kernel(roots[q], leaf_ids, rows)
             for q, (leaf_ids, rows) in planned.items()
@@ -1131,7 +1171,15 @@ class SearchEngine:
                 )
             return pd.concat(outs, ignore_index=True)
 
-        return _score_blocks(candidates, rows, combined, MULTI_SCORE_SCHEMA)
+        need_pos = any(_needs_positions(ids) for ids, _ in planned.values())
+        return _score_blocks(
+            candidates,
+            rows,
+            combined,
+            need_pos,
+            self.reader.dead_doc_ids,
+            MULTI_SCORE_SCHEMA,
+        )
 
     def search_many(
         self,
@@ -1147,7 +1195,7 @@ class SearchEngine:
         per-query window to n_partitions * k rows — a bare
         Window.partitionBy(query) would funnel every match of a
         stop-word-grade query into one reducer."""
-        scored = self._semi_join_live(self.score_many(queries, case_sensitive))
+        scored = self.score_many(queries, case_sensitive)
         pruned = scored.mapInPandas(
             _partial_topn_fn("query", "doc_id", k), schema=MULTI_SCORE_SCHEMA
         )
@@ -1196,15 +1244,15 @@ class SearchEngine:
           3. decode blocks with UB >= θ, exact top-k.
         """
         root = _as_root(query, case_sensitive)
-        candidates, rows, kernel = self._candidates(root)
+        candidates, rows, stream = self._candidates(root)
         spark = self.reader.spark
         if candidates is None:
-            return spark.createDataFrame([], SCORE_SCHEMA)
+            return _no_rows(spark, SCORE_SCHEMA)
 
         def top(cands: DataFrame) -> list:
-            """Exact top-k rows of a candidate slice (after the page
-            anchor, when paging)."""
-            scored = _score_blocks(cands, rows, kernel)
+            """Exact top-k live rows of a candidate slice (after the
+            page anchor, when paging): θ is set by live docs only."""
+            scored = stream(cands)
             if after is not None:
                 scored = _page_after(scored, after)
             top_k = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1262,30 +1310,28 @@ class SearchEngine:
         finally:
             meta.unpersist(blocking=False)
 
-    def _live_filtered(
-        self, scored: DataFrame, filters: Filters | None, live=_MISS
-    ) -> DataFrame:
-        # tombstone-aware readers (incremental MultiReader) expose the
-        # live doc set; postings may still contain replaced/deleted
-        # docs. The reader's docs are its live docs, so a filter on
-        # them is the one semi-join a filtered query needs.
+    def _filtered(self, scored: DataFrame, filters: Filters | None) -> DataFrame:
+        """Scored rows whose doc passes ``filters``: one semi-join with
+        the filtered docs. The scored docIDs are live (the block kernel
+        dropped the dead ones), so the docs need no tombstone join."""
         if filters is not None and not filters.empty:
-            allowed = filters.apply(self.reader.docs).select("doc_id")
+            allowed = filters.apply(self.reader.all_docs).select("doc_id")
             return scored.join(allowed, "doc_id", "left_semi")
-        return self._semi_join_live(scored, live)
+        return scored
 
-    def _live_filtered_scores(
+    def _filtered_scores(
         self,
         query: ast.Node | str,
         filters: Filters | None,
         case_sensitive: bool,
     ) -> DataFrame:
-        return self._live_filtered(self.score(query, case_sensitive), filters)
+        return self._filtered(self.score(query, case_sensitive), filters)
 
     @functools.cached_property
     def _doc_meta(self) -> DataFrame:
-        """The docs-metadata projection a with-docs top-k joins."""
-        return self.reader.docs.select(
+        """The docs-metadata projection a with-docs top-k joins (its
+        docIDs are live, so all docs serve)."""
+        return self.reader.all_docs.select(
             "doc_id", "repo", "path", "commit", "lang", "file_name", "file_ext"
         )
 
@@ -1312,7 +1358,7 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k BM25 search. Returns (doc_id, score [, doc metadata])
         ordered by (score desc, doc_id asc)."""
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         return self._collect_top(scored, k, with_docs)
 
     def search_after(
@@ -1340,7 +1386,7 @@ class SearchEngine:
         filter whose matches are sparse this beats the
         collect-k*N-and-slice idiom by exactly the pages you skip.
         """
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         return self._collect_top(_page_after(scored, after), k, with_docs)
 
     def count(
@@ -1356,7 +1402,7 @@ class SearchEngine:
         serves without materializing any top list).
 
         Short circuits, mirroring Lucene's public count() behavior:
-        - a lone TermQuery with no tombstones and no filters answers
+        - a lone TermQuery with no dead docs and no filters answers
           straight from the term dictionary's df — zero posting
           decode, one cached dictionary point lookup (Lucene reads
           TermStates.docFreq when liveDocs is null);
@@ -1365,8 +1411,7 @@ class SearchEngine:
           materialization of matches.
         """
         root = _as_root(query, case_sensitive)
-        live = getattr(self.reader, "live_doc_ids", lambda: None)()
-        if isinstance(root, ast.Term) and live is None and (
+        if isinstance(root, ast.Term) and self.reader.dead_doc_ids is None and (
             filters is None or filters.empty
         ):
             # boost never changes the match set, so any boost value
@@ -1374,11 +1419,10 @@ class SearchEngine:
             # doc once (segments are doc-disjoint after merge)
             key = (root.field, root.term)
             return self._lookup_exact_df({key[0]: {key[1]}}).get(key, 0)
-        candidates, rows, kernel = self._candidates(root)
+        candidates, _, stream = self._candidates(root)
         if candidates is None:
             return 0
-        matches = _score_blocks(candidates, rows, kernel)
-        return self._live_filtered(matches, filters, live).count()
+        return self._filtered(stream(candidates), filters).count()
 
     def search_collapse(
         self,
@@ -1410,7 +1454,7 @@ class SearchEngine:
         bounded by #partitions x groups x per_group rows. The final
         global order is TakeOrderedAndProject.
         """
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         cols = ["doc_id", group_field]
         if tie_field not in cols:
             cols.append(tie_field)
@@ -1467,7 +1511,7 @@ class SearchEngine:
         groups-in-partition x per_group rows) so a hot group never
         funnels its full match set through one window task.
         """
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         gf, tf, pg = group_field, tie_field, int(per_group)
         cols = ["doc_id", gf]
         if tf not in cols:
@@ -1533,7 +1577,7 @@ class SearchEngine:
         per-partition bounded heap plus a driver merge of k-row
         slices; no global sort materializes.
         """
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         fields = [f for f, _ in sort if f != "score"]
         meta = self.reader.docs.select("doc_id", *dict.fromkeys(fields))
         joined = scored.join(meta, "doc_id")
@@ -1570,7 +1614,7 @@ class SearchEngine:
         TakeOrderedAndProject.
         """
         score_col = self._score_agg(score_mode)
-        scored = self._live_filtered_scores(query, filters, case_sensitive)
+        scored = self._filtered_scores(query, filters, case_sensitive)
         joined = scored.join(
             self.reader.docs.select("doc_id", parent_field), "doc_id"
         )
@@ -1620,7 +1664,7 @@ class SearchEngine:
         """
         self._score_agg(score_mode)  # validate mode before any work
         to_field = from_field if to_field is None else to_field
-        scored = self._live_filtered_scores(
+        scored = self._filtered_scores(
             from_query, filters, case_sensitive
         )
         vals = (
@@ -1637,7 +1681,7 @@ class SearchEngine:
         docs = self.reader.docs
         if filters is not None and not filters.empty:
             docs = filters.apply(docs)  # filter BEFORE the column prune
-        to_docs = self._semi_join_live(docs.select(*cols))
+        to_docs = docs.select(*cols)
         out = to_docs.join(
             F.broadcast(vals),
             F.col(to_field) == F.col("_join_val"),
@@ -2168,9 +2212,7 @@ class SearchEngine:
         matches; `unpivot` stacks the facet columns so ONE map-side
         combinable groupBy produces every facet — not one scan+shuffle
         per facet column."""
-        matched = self._semi_join_live(
-            self.score(query, case_sensitive).select("doc_id")
-        )
+        matched = self.score(query, case_sensitive).select("doc_id")
         docs = self.reader.docs
         if filters is not None and not filters.empty:
             docs = filters.apply(docs)
@@ -2230,9 +2272,7 @@ class SearchEngine:
         fan-out, not the match set. The top-children cap is a
         bounded heap (TakeOrderedAndProject) over that small
         aggregate."""
-        matched = self._semi_join_live(
-            self.score(query, case_sensitive).select("doc_id")
-        )
+        matched = self.score(query, case_sensitive).select("doc_id")
         docs = self.reader.docs
         if filters is not None and not filters.empty:
             docs = filters.apply(docs)
@@ -2396,7 +2436,7 @@ class SearchEngine:
             .collect()
         )
         if not src:
-            return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
+            return _no_rows(self.reader.spark, SCORE_SCHEMA)
         src_id = src[0]["doc_id"]
         toks = (
             tokenize(src[0]["content"] or "")
@@ -2436,7 +2476,7 @@ class SearchEngine:
         more_like_this: the text's term table is clipped at
         ``max_num_tokens_parsed``, the dictionary slice is
         isin/range-pruned, and the query runs block-max WAND when no
-        tombstones/filters apply."""
+        filters apply."""
         from codeindex_spark.tokenizer import tokenize, tokenize_lower
 
         toks = (
@@ -2477,7 +2517,7 @@ class SearchEngine:
             tf[t] = tf.get(t, 0) + 1
         terms = sorted(t for t, n in tf.items() if n >= min_term_freq)
         if not terms:
-            return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
+            return _no_rows(self.reader.spark, SCORE_SCHEMA)
         td = self.reader.term_dict.filter(F.col("field") == field)
         if len(terms) <= self.ISIN_PUSHDOWN_CAP:
             td = td.filter(F.col("term").isin(terms))
@@ -2498,20 +2538,20 @@ class SearchEngine:
         ranked.sort(key=lambda p: (-p[0], p[1]))
         chosen = [t for _, t in ranked[:max_query_terms]]
         if not chosen:
-            return self.reader.spark.createDataFrame([], SCORE_SCHEMA)
+            return _no_rows(self.reader.spark, SCORE_SCHEMA)
         node: ast.Node = (
             ast.Term(chosen[0], field)
             if len(chosen) == 1
             else ast.Or(tuple(ast.Term(t, field) for t in chosen))
         )
         # a 25-term OR is exactly the block-max WAND case: prune
-        # posting blocks by upper bound before decoding. Fall back to
-        # the plain path when tombstones or metadata filters apply
-        # (they drop rows AFTER scoring, which would starve a
-        # pre-limited WAND result).
-        live = getattr(self.reader, "live_doc_ids", lambda: None)()
+        # posting blocks by upper bound before decoding. Dead docs
+        # drop in the kernel, so WAND's θ counts live docs only; fall
+        # back to the plain path when metadata filters apply (they
+        # drop rows AFTER scoring, which would starve a pre-limited
+        # WAND result).
         extra = 1 if exclude_id is not None else 0
-        if filters is None and live is None:
+        if filters is None:
             top = self.search_wand(node, k=k + extra)
         else:
             top = self.search(node, k=k + extra, filters=filters)
@@ -2770,7 +2810,7 @@ def _make_tree_batch_kernel(
         for node, lid in leaf_ids.items()
         if isinstance(node, ast.SpanNot)
     }
-    need_pos = bool(phrase_nslots) or bool(spanfirst_end) or bool(spannot_pp)
+    need_pos = _needs_positions(leaf_ids)
 
     def eval_node(node, leaf_data):
         if isinstance(

@@ -10,8 +10,9 @@ The Spark-native equivalent is Lucene's *segment* model made explicit:
 - each applied change-set becomes a **delta segment** — a complete
   mini-index whose docID space stacks above all prior segments
   (block-aligned, so block algebra still works across segments);
-- replaced/deleted docs become **tombstones** (doc_key rows);
-  query-time scoring anti-joins them out;
+- replaced/deleted docs become **tombstones** (doc_key rows); a
+  reader resolves them once to its dead docIDs, and the block kernel
+  drops those docs from every scored stream (Lucene's liveDocs);
 - corpus statistics (N, avgdl, df) are merged across segments and —
   exactly like Lucene before a merge — still count tombstoned docs
   until ``compact()`` rebuilds a fresh base.
@@ -38,6 +39,7 @@ import json
 import os
 import shutil
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -328,7 +330,10 @@ class IncrementalIndex:
                                the generation that commits it
         deltas/d0001/ ...    — delta segments (same layout)
         tombstones.parquet   — doc_key rows excluded at query time,
-                               epoch-tagged (the apply ordinal)
+                               epoch-tagged (the apply ordinal); a
+                               reader turns them into its dead docIDs
+                               (``MultiReader.dead_doc_ids``), which
+                               the block kernel drops
         merged/term_dict.parquet — the segments' dictionaries summed
         _segments.json       — ordered segment list + doc-space ends
                                + epochs + the n_applies counter + the
@@ -777,11 +782,21 @@ class MultiReader:
     postings/docs, merged dictionary/stats, tombstone-aware liveness)
     and a drop-in for SearchEngine.
 
+    Liveness is enforced in two places. ``dead_doc_ids`` holds the
+    docIDs the reader's tombstones kill; SearchEngine's block kernel
+    drops them from every scored stream (Lucene's liveDocs check in
+    the scorer), so a scored search runs no tombstone join. ``docs``
+    is the live docs (segment docs anti-joined with the tombstones)
+    for the surfaces that read docs directly; ``all_docs`` keeps the
+    dead ones, for joins keyed by docIDs that already passed the
+    kernel.
+
     The segment list is pinned at open; each table frame (``docs``,
-    ``postings``, ``term_dict``, ``hints``), the dictionary's pyarrow
-    dataset (``term_dfs``) and ``stats`` is opened on first access,
-    with its declared schema where it reads a table, and then held, so
-    a query does not re-list files per access. The held frames keep
+    ``all_docs``, ``postings``, ``term_dict``, ``hints``), the dead
+    docIDs, the dictionary's pyarrow dataset (``term_dfs``) and
+    ``stats`` is opened on first access, with its declared schema
+    where it reads a table, and then held, so a query does not re-list
+    files per access. The held frames keep
     the file listing they were opened with: reopen the reader
     after apply_*(), compact() or merge_compact(). Every access checks
     ``_segments.json`` (no Spark job): a latest-view reader raises
@@ -824,14 +839,28 @@ class MultiReader:
     def _seg_stats(self) -> list[pd.DataFrame]:
         return _segment_stats(self._segs)
 
-    @functools.cached_property
-    def _all_docs(self) -> DataFrame:
+    @_held
+    def all_docs(self) -> DataFrame:
+        """The pinned segments' docs, tombstoned ones included."""
         return _read_segments(self.spark, self._segs, "docs")
 
     @_held
     def docs(self) -> DataFrame:
         """The live docs: the segments' docs minus the tombstones."""
-        return _live(self._all_docs, self._tombstones)
+        return _live(self.all_docs, self._tombstones)
+
+    @_held
+    def dead_doc_ids(self) -> np.ndarray | None:
+        """Sorted int64 docIDs of the pinned segments' docs that this
+        reader's tombstones kill (an ``as_of`` reader sees the
+        tombstones up to its epoch), read on first access by one
+        broadcast semi-join (two Spark jobs: the tombstones' broadcast
+        and the collect); None when no doc is dead."""
+        if self._tombstones is None:
+            return None
+        dead = self.all_docs.join(self._tombstones, "doc_key", "left_semi")
+        ids = dead.select("doc_id").toPandas()["doc_id"].to_numpy(np.int64)
+        return np.sort(ids) if len(ids) else None
 
     @_held
     def postings(self) -> DataFrame:
@@ -915,7 +944,7 @@ class MultiReader:
         )
         if self._tombstones is None:
             return td.withColumn("removed", F.lit(0))
-        dead = self._all_docs.join(self._tombstones, "doc_key", "left_semi")
+        dead = self.all_docs.join(self._tombstones, "doc_key", "left_semi")
         removed = (
             token_rows(dead, fields=("content_cs",))
             .groupBy(F.col("term").alias("word"))
@@ -928,12 +957,6 @@ class MultiReader:
         return merged_stats(self._seg_stats)
 
     field_stats = IndexReader.field_stats
-
-    def live_doc_ids(self) -> DataFrame | None:
-        """doc_id of the held live docs; None when there are no
-        tombstones (every posting is live)."""
-        docs = self.docs
-        return None if self._tombstones is None else docs.select("doc_id")
 
 
 # ------------------------------------------------------------- ST1/ST2

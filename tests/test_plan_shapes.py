@@ -7,6 +7,7 @@ passes every value-correctness test while becoming a corpus scan at
 from __future__ import annotations
 
 import itertools
+import re
 
 import pandas as pd
 import pytest
@@ -216,8 +217,8 @@ def stacked_engine(spark, tmp_path_factory):
 
 def test_stacked_reader_opens_each_frame_once(stacked_engine):
     rdr = stacked_engine.reader
-    assert rdr.live_doc_ids() is not None  # tombstones present
-    for name in ("docs", "postings", "term_dict"):
+    assert rdr.dead_doc_ids is not None  # tombstones present
+    for name in ("docs", "all_docs", "postings", "term_dict", "dead_doc_ids"):
         assert getattr(rdr, name) is getattr(rdr, name), name
 
 
@@ -236,18 +237,82 @@ def test_stacked_warm_search_plans_without_jobs(spark, stacked_engine):
 
 
 def test_stacked_filtered_search_joins_live_set_once(stacked_engine):
-    """A filter on the stacked reader's docs (its live docs) is the
-    only semi-join a filtered search needs: its plan holds as many
-    semi- and anti-joins as the unfiltered search's."""
+    """The stacked reader's dead docs drop in the block kernel, so a
+    scored search joins no tombstones: the unfiltered plan holds no
+    semi- or anti-join, and the filter is the one semi-join a filtered
+    search adds."""
     q = ast.parse_query("get OR string")
 
     def joins(frame):
         plan = _final_plan(frame).toString()
         return plan.count("LeftSemi"), plan.count("LeftAnti")
 
-    unfiltered = joins(stacked_engine.search(q, k=5))
-    filtered = joins(stacked_engine.search(q, k=5, filters=Filters(lang="python")))
-    assert filtered == unfiltered
+    assert joins(stacked_engine.search(q, k=5)) == (0, 0)
+    filtered = stacked_engine.search(q, k=5, filters=Filters(lang="python"))
+    assert joins(filtered) == (1, 0)
+
+
+def test_stacked_exact_search_runs_two_jobs(spark, stacked_engine):
+    """Once the reader holds its dead docIDs, an unfiltered exact-term
+    with-docs search on the stacked reader collects in at most two
+    jobs, like one index's (test_uncached_exact_search_runs_two_jobs):
+    no tombstone anti-join and no literal list of docIDs in the plan."""
+    assert stacked_engine.reader.dead_doc_ids is not None
+    frame = stacked_engine.search(
+        ast.parse_query("get OR string"), k=5, with_docs=True
+    )
+    assert len(_jobs_in(spark, frame.collect)) <= 2
+    plan = _final_plan(frame).toString()
+    assert "LeftAnti" not in plan
+    assert not re.search(r"(In|InSet)\(doc_id,|doc_id#\d+L? (INSET|IN)\b", plan)
+
+
+def test_stacked_more_like_this_uses_wand(stacked_engine, monkeypatch):
+    """On a reader with dead docs, more_like_this runs block-max WAND
+    (θ comes from live docs only) and returns what its plain-search
+    path returns; an empty Filters() takes the plain path."""
+    eng = stacked_engine
+    calls = []
+    wand = eng.search_wand
+    monkeypatch.setattr(
+        eng, "search_wand", lambda *a, **kw: calls.append(a) or wand(*a, **kw)
+    )
+    keys = [r["doc_key"] for r in eng.reader.docs.orderBy("doc_id").limit(4).collect()]
+    for key in keys:
+        opts = dict(k=5, min_term_freq=1, min_doc_freq=1)
+        got = eng.more_like_this(key, **opts).collect()
+        n_wand = len(calls)
+        plain = eng.more_like_this(key, filters=Filters(), **opts).collect()
+        assert len(calls) == n_wand
+        assert [r["doc_id"] for r in got] == [r["doc_id"] for r in plain], key
+        assert [r["score"] for r in got] == pytest.approx(
+            [r["score"] for r in plain], rel=1e-9
+        )
+    assert len(calls) == len(keys)
+
+
+def test_unknown_term_search_collects_without_job(spark, engine):
+    """A search with no dictionary match scores an empty frame the
+    optimizer folds away: its with-docs collect runs no Spark job."""
+    frame = engine.search(ast.Term("zzzznotaterm", "content"), k=5, with_docs=True)
+    assert _jobs_in(spark, frame.collect) == []
+    assert frame.collect() == []
+
+
+def test_block_stream_reads_only_kernel_columns(engine):
+    """The block stream reads the columns its kernel decodes: a term
+    query's scan holds no position stream and no column the kernel
+    never reads; a phrase query's scan adds the positions."""
+
+    def read_schema(query) -> str:
+        plan = _final_plan(engine.search(query, k=5)).toString()
+        return re.search(r"ReadSchema: (struct<[^\n]*)", plan).group(1)
+
+    term = read_schema(ast.Term("get", "content"))
+    assert "pos_" not in term, term
+    for col in ("cf", "block_max_tfnorm"):
+        assert f"{col}:" not in term, term
+    assert "pos_counts" in read_schema(ast.Phrase(("get", "string"), "content"))
 
 
 def test_warm_term_count_launches_no_job(spark, engine):

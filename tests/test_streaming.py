@@ -392,6 +392,74 @@ def test_wand_admissible_on_stacked_segments(spark, tmp_path):
         assert wand == exact, k
 
 
+@pytest.fixture(scope="module")
+def two_applies(spark, tmp_path_factory, versions):
+    """Apply 1 replaces doc 2, apply 2 deletes doc 7: ``as_of=1`` sees
+    the replaced version dead and doc 7 live, the latest reader sees
+    both dead."""
+    v1 = versions[0]
+    inc = IncrementalIndex(
+        spark, str(tmp_path_factory.mktemp("liveidx")), PARAMS, n_groups=1
+    )
+    inc.build_base(spark.createDataFrame(v1))
+    v2 = v1.copy()
+    v2.loc[2, "content"] = "replacement livecheckterm content here"
+    v2.loc[2, "commit"] = "clivecheck002"
+    inc.apply_snapshot(spark.createDataFrame(v2))
+    inc.apply_snapshot(spark.createDataFrame(v2.drop(index=7)))
+    return inc, v1
+
+
+class _Unmasked:
+    """A reader with its dead docIDs hidden: every posting scores."""
+
+    dead_doc_ids = None
+
+    def __init__(self, inner):
+        self._inner = inner
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+
+@pytest.mark.parametrize("as_of", [None, 1])
+def test_dead_docs_never_return(two_applies, as_of):
+    """Replaced and deleted docs drop in the block kernel, on every
+    scored surface (search, score_many, count, search_wand,
+    facet_counts) and for a latest and an ``as_of`` reader: each
+    returns the unmasked scoring of the same reader restricted to its
+    live docs."""
+    inc, v1 = two_applies
+    rdr = inc.reader(as_of=as_of)
+    eng, unmasked = SearchEngine(rdr), SearchEngine(_Unmasked(rdr))
+    live = {r["doc_id"] for r in rdr.docs.select("doc_id").collect()}
+    every = {r["doc_id"] for r in rdr.all_docs.select("doc_id").collect()}
+    dead = set(rdr.dead_doc_ids.tolist())
+    assert dead == every - live and len(dead) == (1 if as_of == 1 else 2)
+    terms = sorted(
+        set(tokenize(v1.loc[2, "content"].lower()))
+        | set(tokenize(v1.loc[7, "content"].lower()))
+    )[:12]
+    q = ast.Or(tuple(ast.Term(t, "content") for t in terms))
+    one = ast.Term(terms[0], "content")
+
+    def ranked(frame):
+        return [(r["doc_id"], r["score"]) for r in frame.collect()]
+
+    want = [r for r in ranked(unmasked.search(q, k=1000)) if r[0] in live]
+    assert dead & {d for d, _ in ranked(unmasked.search(q, k=1000))}
+    assert ranked(eng.search(q, k=1000)) == want
+    assert ranked(eng.search_wand(q, k=5)) == want[:5]
+    assert eng.count(q) == len(want)
+    n_one = sum(1 for d, _ in ranked(unmasked.score(one)) if d in live)
+    assert eng.count(one) == n_one
+    many = eng.score_many({"a": q, "b": one}).collect()
+    assert {r["doc_id"] for r in many if r["query"] == "a"} == {d for d, _ in want}
+    assert not dead & {r["doc_id"] for r in many}
+    facets = eng.facet_counts(q, by=("repo",)).collect()
+    assert sum(r["n_docs"] for r in facets) == len(want)
+
+
 def test_hint_word_removed_with_last_doc(spark, tmp_path):
     """Reference deletes a hint word when the last doc containing it
     goes away (CodeIndexBuilder.cs:369-375,446-452) — WITHOUT waiting

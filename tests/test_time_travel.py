@@ -206,6 +206,19 @@ def test_latest_reader_after_apply_raises(one_apply, spark):
     assert SearchEngine(inc.reader()).search(STALE_QUERY, k=5).count() > 0
 
 
+def test_stale_reader_raises_on_dead_set(one_apply, spark):
+    """The dead docIDs are held like every frame: read once, and a
+    stale reader raises on them as on any other access."""
+    inc, v2 = one_apply
+    rdr = inc.reader()
+    dead = rdr.dead_doc_ids
+    assert len(dead) == 1 and rdr.dead_doc_ids is dead
+    inc.apply_snapshot(spark.createDataFrame(v2.drop(index=0)))
+    with pytest.raises(ValueError, match="reopen"):
+        rdr.dead_doc_ids
+    assert len(inc.reader().dead_doc_ids) == 2
+
+
 def test_as_of_reader_survives_later_apply(one_apply, spark):
     inc, v2 = one_apply
     eng = SearchEngine(inc.reader(as_of=1))

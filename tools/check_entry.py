@@ -50,6 +50,9 @@ def main() -> int:
 
     from codeindex_spark.session import get_spark
 
+    # get_spark defaults to a 32g driver heap; over a full sweep that
+    # one JVM outgrows a 15 GB host and is OOM-killed
+    os.environ.setdefault("SPARK_DRIVER_MEM", "5g")
     spark = get_spark(app_name="check-entry", cores=8, shuffle_partitions=8)
     sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
